@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -63,6 +63,7 @@ object Verify {
     require(workers >= 1, s"SPARK_GRAFT_VERIFY_WORKERS=$workers must be >= 1")
     val t0 = System.nanoTime()
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
+    val failed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(workers)
     try {
       val futures = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -73,6 +74,9 @@ object Verify {
               .parquet(s"$outDir/$name")
             catch { case e: Throwable =>
               System.err.println(s"[verify] $name failed: ${e.getMessage}")
+              failed.add(name)
+              // a previous run's output must not pass for this one's
+              Paths.rmTree(new java.io.File(s"$outDir/$name"))
             }
             val n = done.incrementAndGet()
             System.err.println(f"[verify] $n%3d/${selected.size} $name ${(System.nanoTime() - q0) / 1e9}%.1fs (cumulative ${(System.nanoTime() - t0) / 1e9}%.1fs)")
@@ -95,7 +99,12 @@ object Verify {
     } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (!failed.isEmpty) {
+      val names = failed.toArray(Array.empty[String]).sorted
+      System.err.println(s"[verify] ${names.length} of ${selected.size} gates failed: ${names.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -480,9 +480,15 @@ object Sketch {
     * precedent. Meta is a CORRECTNESS input (bucket geometry / bit
     * space), so [[writeIndexDir]] invalidates around its swap via
     * [[FsOps.swapDirsInvalidating]] (remove → swap → remove, the
-    * round-10 rule); appends/compactions keep parameters verbatim. */
+    * round-10 rule); appends/compactions keep parameters verbatim.
+    * Keys carry the index family ([[metaKey]]), so one path read through
+    * both getters never aliases two sidecar shapes. Only this JVM's
+    * rewrites invalidate: an index rebuilt by another process with new
+    * parameters needs a reader restart. */
   private val indexMetaCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Any]]()
+  private val metaFamilies = Seq("bloom", "hist")
+  private def metaKey(family: String, path: String) = s"$family:$path"
 
   /** Shared persisted-index plumbing for the whole sketch tier: sketch
     * rows at the dir root plus a `_meta` parquet sidecar (underscore
@@ -496,7 +502,7 @@ object Sketch {
     rows.write.mode("overwrite").parquet(tmp)
     metaDf.coalesce(1).write.mode("overwrite").parquet(tmp + "/_meta")
     FsOps.swapDirsInvalidating(spark, tmp, path)(() => {
-      indexMetaCache.remove(path); ()
+      metaFamilies.foreach(f => indexMetaCache.remove(metaKey(f, path))); ()
     })
   }
 
@@ -521,7 +527,7 @@ object Sketch {
   def readBloomMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Int) = {
     healIndex(spark, path) // heal EVERY entry, memoize only the value
-    val v = indexMetaCache.computeIfAbsent(path, _ => {
+    val v = indexMetaCache.computeIfAbsent(metaKey("bloom", path), _ => {
       val r = spark.read.parquet(path + "/_meta").collect().head
       Seq(r.getInt(0), r.getInt(1))
     })
@@ -675,7 +681,7 @@ object Sketch {
   /** Sketch parameter subBits from the `_meta` sidecar (heals first). */
   def readHistMeta(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
     healIndex(spark, path) // heal EVERY entry, memoize only the value
-    indexMetaCache.computeIfAbsent(path, _ =>
+    indexMetaCache.computeIfAbsent(metaKey("hist", path), _ =>
       Seq(spark.read.parquet(path + "/_meta").collect().head.getInt(0)))
       .head.asInstanceOf[Int]
   }

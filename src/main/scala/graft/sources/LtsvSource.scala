@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.NoDataError
@@ -12,7 +15,9 @@ import graft.NoDataError
   * Spark-first: lines are parsed with pure Catalyst expressions
   * (`split` / `substring_index` / `map_from_entries`) — fully distributed
   * and codegen'd; only the small distinct key set is collected to the
-  * driver to build the projection.
+  * driver to build the projection. The inference sample (the first
+  * [[TypeInference.MaxSampleSize]] non-blank lines) is parsed by a
+  * driver-side read of the file head with the same rules — no Spark job.
   *
   * Deviation (documented, SURVEY §1.4): the reference's column order is Go
   * map-iteration order, i.e. unspecified — we sort keys for determinism.
@@ -51,7 +56,30 @@ object LtsvSource {
     if (keys.isEmpty) throw NoDataError(path)
     val cols = keys.map(k => coalesce(element_at(col("m"), k), lit("")).as(k))
     val allString = mapped.select(cols: _*)
-    if (inferTypes) TypeInference.applyTypes(allString, TypeInference.inferForDataFrame(allString))
+    if (inferTypes)
+      TypeInference.applyTypes(allString, TypeInference.inferForRows(keys, headRows(readable, keys)))
     else allString
+  }
+
+  /** The first [[TypeInference.MaxSampleSize]] lines that SQL `trim`
+    * (spaces only) leaves non-empty, parsed as above on the driver:
+    * split on tabs, key before the first ':', last key wins, projected
+    * onto `keys` with `""` for an absent key. */
+  private[sources] def headRows(path: String, keys: Seq[String]): Seq[Seq[String]] = {
+    val r = new BufferedReader(new InputStreamReader(Compression.openRead(path), StandardCharsets.UTF_8))
+    try {
+      r.mark(1)
+      if (r.read() != 0xFEFF) r.reset() // the text reader drops a leading BOM
+      Iterator.continually(r.readLine()).takeWhile(_ != null)
+        .filter(_.exists(_ != ' '))
+        .take(TypeInference.MaxSampleSize)
+        .map { line =>
+          val m = line.split("\t", -1).iterator.map { kv =>
+            val i = kv.indexOf(':')
+            if (i < 0) kv -> "" else kv.substring(0, i) -> kv.substring(i + 1)
+          }.toMap
+          keys.map(m.getOrElse(_, ""))
+        }.toVector
+    } finally r.close()
   }
 }

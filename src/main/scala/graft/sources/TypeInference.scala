@@ -21,10 +21,14 @@ import org.apache.spark.sql.functions._
   *     at >50% text; DATETIME at ≥80%; REAL when reals ≥10% and
   *     int+real ≥80%; INTEGER at ≥80%; fallbacks REAL > INTEGER > DATETIME > TEXT
   *
-  * Spark-side: [[TypeInference.inferForDataFrame]] samples only the head of
-  * the DataFrame (the reference's streaming path likewise infers from the
-  * first chunk only, `stream.go:285-317`) — no full scan, so inference cost
-  * is O(sample), not O(data), regardless of table size.
+  * Sampling: only the first [[TypeInference.MaxSampleSize]] rows are
+  * inspected (the reference's streaming path likewise infers from the
+  * first chunk only, `stream.go:285-317`), so inference cost is
+  * O(sample), not O(data). The text sources read that head on the driver
+  * in the same pass that yields their header and hand it to
+  * [[TypeInference.inferForRows]] — no Spark job;
+  * [[TypeInference.inferForDataFrame]] runs the same routine over a
+  * DataFrame's `head`.
   */
 object TypeInference {
 
@@ -70,19 +74,19 @@ object TypeInference {
     DatetimeFamily("iso-tz",
       "^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}(\\.\\d+)?(Z|[+-]\\d{2}:\\d{2})$".r,
       Seq(DateTimeFormatter.ISO_OFFSET_DATE_TIME),
-      c => c.cast("timestamp")),
+      c => c.try_cast("timestamp")),
     DatetimeFamily("iso",
       "^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}(\\.\\d+)?$".r,
       Seq(fmtOptFrac("uuuu-MM-dd'T'HH:mm:ss")),
-      c => c.cast("timestamp")),
+      c => c.try_cast("timestamp")),
     DatetimeFamily("iso-space",
       "^\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}(\\.\\d+)?$".r,
       Seq(fmtOptFrac("uuuu-MM-dd HH:mm:ss")),
-      c => c.cast("timestamp")),
+      c => c.try_cast("timestamp")),
     DatetimeFamily("date",
       "^\\d{4}-\\d{2}-\\d{2}$".r,
       Seq(fmt("uuuu-MM-dd")),
-      c => c.cast("timestamp")),
+      c => c.try_cast("timestamp")),
     DatetimeFamily("us-datetime",
       "^\\d{1,2}/\\d{1,2}/\\d{4} \\d{1,2}:\\d{2}:\\d{2}( (AM|PM))?$".r,
       Seq(fmt("M/d/uuuu H:mm:ss"), fmt("M/d/uuuu h:mm:ss a")),
@@ -231,18 +235,20 @@ object TypeInference {
     else TextType
   }
 
-  /** Infer every column's type from sampled head rows of an all-string
-    * DataFrame. Only `sampleRows` rows are fetched to the driver —
-    * first-chunk semantics (`stream.go:285-317`), scale-safe. */
-  def inferForDataFrame(df: DataFrame, sampleRows: Int = MaxSampleSize): Seq[(String, ColType)] = {
-    val cols = df.columns
-    val rows = df.head(sampleRows)
-    cols.zipWithIndex.map { case (name, i) =>
-      val values: IndexedSeq[String] =
-        rows.iterator.map(r => if (r.isNullAt(i)) "" else String.valueOf(r.get(i))).toIndexedSeq
-      name -> inferType(values)
-    }.toSeq
-  }
+  /** Infer every column's type from head rows already on the driver —
+    * the per-column routine every source uses. A row shorter than
+    * `names` (or a null cell) reads as "". */
+  def inferForRows(names: Seq[String], rows: Seq[Seq[String]]): Seq[(String, ColType)] =
+    names.zipWithIndex.map { case (name, i) =>
+      name -> inferType(rows.iterator.map(r => if (i < r.length && r(i) != null) r(i) else "").toIndexedSeq)
+    }
+
+  /** [[inferForRows]] over the first `sampleRows` rows of an all-string
+    * DataFrame (one Spark job) — first-chunk semantics
+    * (`stream.go:285-317`), scale-safe. */
+  def inferForDataFrame(df: DataFrame, sampleRows: Int = MaxSampleSize): Seq[(String, ColType)] =
+    inferForRows(df.columns.toSeq, df.head(sampleRows).toSeq.map(r =>
+      r.toSeq.map(v => if (v == null) "" else String.valueOf(v))))
 
   /** Apply inferred types by casting columns (distributed, codegen'd —
     * no UDFs): INTEGER→long, REAL→double, DATETIME→timestamp via the
@@ -257,7 +263,7 @@ object TypeInference {
         case RealType => c.try_cast("double")
         case DatetimeType(fams) =>
           val parsers = fams.map(_.sparkParse(c))
-          if (parsers.isEmpty) c.cast("timestamp") else coalesce(parsers: _*)
+          if (parsers.isEmpty) c.try_cast("timestamp") else coalesce(parsers: _*)
       }).as(name)
     }
     df.select(projected: _*)

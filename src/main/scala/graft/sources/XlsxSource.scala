@@ -24,6 +24,9 @@ import graft.NoDataError
   * SURVEY §4). Parsed rows are parallelized into a DataFrame; for
   * 100 TB-scale inputs one ingests many files (one task per file) or
   * converts to parquet at the edge — this reader exists for format parity.
+  * The rows are already in driver memory, so inference reads the first
+  * [[TypeInference.MaxSampleSize]] of them directly: opening a workbook
+  * runs no Spark job.
   */
 object XlsxSource {
 
@@ -66,14 +69,15 @@ object XlsxSource {
     val header = rows.head.map(_.trim)
     CsvSource.checkDuplicateColumns(TableNaming.fromPath(path), header)
     val width = header.length
-    val data = rows.tail.map { r =>
-      Row.fromSeq(r.padTo(width, "").take(width))
-    }
+    val cells = rows.tail.map(_.padTo(width, "").take(width))
+    val data = cells.map(Row.fromSeq)
     val schema = StructType(header.map(StructField(_, StringType, nullable = false)))
     val allString = spark.createDataFrame(
       spark.sparkContext.parallelize(data, math.max(1, math.min(data.size / 10000 + 1, 32))),
       schema)
-    if (inferTypes) TypeInference.applyTypes(allString, TypeInference.inferForDataFrame(allString))
+    if (inferTypes)
+      TypeInference.applyTypes(allString,
+        TypeInference.inferForRows(header, cells.take(TypeInference.MaxSampleSize)))
     else allString
   }
 

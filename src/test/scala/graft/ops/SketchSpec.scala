@@ -493,6 +493,18 @@ class SketchSpec extends SparkSpec {
     assert(estMap(Sketch.probeCmIndex(spark, path, probes, "key", "value")) == viaIndex)
   }
 
+  test("index meta memo is keyed per family: one path read through both getters") {
+    // a bloom sidecar holds (num_bits, num_hashes); the hist getter reads
+    // its first column. Memoised under a shared bare-path key, the hist
+    // read's one-element value would then be served to the bloom getter.
+    val path = tmpDir("meta-alias").resolve("idx").toString
+    Sketch.writeBloomIndex(Seq(("k", "a")).toDF("key", "v"), "key", "v", path,
+      numBits = 4096, numHashes = 3)
+    assert(Sketch.readHistMeta(spark, path) == 4096)
+    assert(Sketch.readBloomMeta(spark, path) == ((4096, 3)))
+    assert(Sketch.readHistMeta(spark, path) == 4096)
+  }
+
   test("persisted hist index: write/append/quantiles/compact lifecycle + heal") {
     val day1 = (0 until 8000).map(i => ("k", (i * 2654435761L) % 65536L)).toDF("key", "v")
     val day2 = (0 until 8000).map(i => ("k", (i * 40503L) % 300000L)).toDF("key", "v")

@@ -35,6 +35,19 @@ class SourcesSpec extends SparkSpec {
     assert(notes == Seq("hello, world", "say \"hi\""))
   }
 
+  test("CSV: a leading UTF-8 BOM is not part of the first column name; row one still reads") {
+    val dir = tmpDir("csvbom")
+    val p = writeFile(dir, "bom.csv", "\uFEFFid,name\n1,a\n2,b\n")
+    assert(CsvSource.readHeader(p, ',') == Seq("id", "name"))
+    for (ml <- Seq(None, Some(true))) {
+      val df = CsvSource.readCsv(spark, p, multiLine = ml)
+      assert(df.columns.toSeq == Seq("id", "name"), s"multiLine $ml")
+      assert(df.schema("id").dataType == LongType, s"multiLine $ml")
+      assert(df.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+        Seq((1L, "a"), (2L, "b")), s"multiLine $ml")
+    }
+  }
+
   test("CSV: duplicate column names rejected") {
     val dir = tmpDir("csvdup")
     val p = writeFile(dir, "duplicate_columns.csv", "id,name,id,email\n1,a,2,b\n")
@@ -48,6 +61,14 @@ class SourcesSpec extends SparkSpec {
     val df = CsvSource.readCsv(spark, p)
     assert(df.schema("created_at").dataType == TimestampType)
     assert(df.filter("created_at >= '2023-06-01'").count() == 1)
+  }
+
+  test("CSV: an empty cell in an ISO datetime column reads as NULL, not a cast error") {
+    val dir = tmpDir("csvdtnull")
+    val p = writeFile(dir, "t.csv", "id,d\n1,2024-01-01\n2,\n3,2024-01-03\n")
+    val df = CsvSource.readCsv(spark, p)
+    assert(df.schema("d").dataType == TimestampType)
+    assert(df.filter("d IS NULL").collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
   test("CSV: mixed int/real column becomes REAL; empty cells become NULL") {
