@@ -1128,9 +1128,11 @@ object GraftSession {
     def withoutTypeInference(): Builder = { inferTypes = false; this }
 
     /** CSV/TSV multiLine control: None (default) auto-detects quoted
-      * embedded newlines with an extra scan; Some(false) skips the
-      * detection pass — the right call for large known-newline-free data
-      * (keeps files line-splittable); Some(true) forces multiLine. */
+      * embedded newlines with an extra scan — on the driver for a file
+      * Spark reads in one split, a Spark job for a larger one; Some(false)
+      * skips the detection pass — the right call for large
+      * known-newline-free data (keeps files line-splittable); Some(true)
+      * forces multiLine. */
     def withCsvMultiLine(multiLine: Option[Boolean]): Builder = {
       csvMultiLine = multiLine; this
     }

@@ -7,6 +7,7 @@ import org.apache.commons.compress.compressors.bzip2.{BZip2CompressorInputStream
 import org.apache.commons.compress.compressors.gzip.{GzipCompressorInputStream, GzipCompressorOutputStream}
 import org.apache.commons.compress.compressors.xz.{XZCompressorInputStream, XZCompressorOutputStream}
 import org.apache.commons.compress.compressors.zstandard.{ZstdCompressorInputStream, ZstdCompressorOutputStream}
+import org.apache.spark.sql.SparkSession
 
 /** Transparent compression support keyed on file extension, matching the
   * reference's codec matrix (`compression.go:32-208`, `stream.go:76-108`):
@@ -77,6 +78,20 @@ object Compression {
       finally in.close()
       target.toFile.deleteOnExit()
       target.toString
+  }
+
+  /** Would Spark read `readable` (a path from [[sparkReadablePath]]) in
+    * one input split? True for gzip, which Hadoop cannot split, and for a
+    * file no larger than `min(maxPartitionBytes, openCostInBytes)`: Spark
+    * splits at `FilePartition.maxSplitBytes = min(maxPartitionBytes,
+    * max(openCostInBytes, bytesPerCore))`, never below that bound. Plan-free
+    * (no Spark planning, no job). A source uses it only to decide where a
+    * whole-file scan runs — the driver when Spark's scan would be one task
+    * anyway — never what the scan answers. */
+  def singleSplit(spark: SparkSession, readable: String): Boolean = {
+    val conf = spark.sessionState.conf
+    forPath(readable).contains(Gzip) ||
+      Files.size(Paths.get(readable)) <= math.min(conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
   }
 
   /** Open a local file for reading with transparent decompression. */

@@ -22,10 +22,12 @@ import graft.DuplicateColumnError
   * first [[TypeInference.MaxSampleSize]] records — the reference likewise
   * infers from the first chunk, `stream.go:285-317`). Spark gets the
   * header as an explicit all-string schema, so neither its header job nor
-  * a sampling job runs; the only Spark job before the user's query is the
-  * quoted-newline scan (skipped with `multiLine = Some(…)`). The bulk
-  * load is a distributed scan. gz/bz2 decode inside Spark; xz/zst via the
-  * one-time shim in [[Compression]].
+  * a sampling job runs. The quoted-newline scan (skipped with
+  * `multiLine = Some(…)`) runs on the driver when Spark would read the
+  * file in one split ([[Compression.singleSplit]]) — an open then
+  * launches no Spark job — and as a Spark job otherwise, so a large file
+  * stays line-splittable. The bulk load is a distributed scan. gz/bz2
+  * decode inside Spark; xz/zst via the one-time shim in [[Compression]].
   */
 object CsvSource {
 
@@ -51,7 +53,32 @@ object CsvSource {
       .head(1).nonEmpty
   }
 
-  /** @param multiLine None = auto-detect via [[detectQuotedNewlines]].
+  /** Driver-side twin of the distributed [[detectQuotedNewlines]]: the
+    * same odd-quote rule over the same LF/CRLF/CR lines, streamed once
+    * and stopped at the first odd line. Bytewise is exact: '"', CR and LF
+    * never occur inside a UTF-8 multi-byte sequence. */
+  def detectQuotedNewlines(readable: String): Boolean = {
+    val in = Compression.openRead(readable)
+    try {
+      val buf = new Array[Byte](1 << 16)
+      var odd = false
+      var n = in.read(buf)
+      while (n >= 0) {
+        var i = 0
+        while (i < n) {
+          val b = buf(i)
+          if (b == '"') odd = !odd
+          else if (odd && (b == '\n' || b == '\r')) return true
+          i += 1
+        }
+        n = in.read(buf)
+      }
+      odd
+    } finally in.close()
+  }
+
+  /** @param multiLine None = auto-detect via [[detectQuotedNewlines]]:
+    *   on the driver for a single-split file, as a Spark job otherwise.
     *   Files with embedded newlines inside quoted fields (which
     *   [[graft.sinks.Dump]] legitimately writes) need multiLine parsing or
     *   they silently split into corrupt rows; files without them stay on
@@ -60,7 +87,9 @@ object CsvSource {
   def read(spark: SparkSession, path: String, delimiter: String,
       inferTypes: Boolean, multiLine: Option[Boolean]): DataFrame = {
     val readable = Compression.sparkReadablePath(path)
-    val ml = multiLine.getOrElse(detectQuotedNewlines(spark, readable))
+    val ml = multiLine.getOrElse(
+      if (Compression.singleSplit(spark, readable)) detectQuotedNewlines(readable)
+      else detectQuotedNewlines(spark, readable))
     val sample = if (inferTypes) TypeInference.MaxSampleSize else 0
     val head = readRecords(readable, delimiter.charAt(0), 1 + sample, ml)
     val header = head.headOption.getOrElse(Seq.empty)

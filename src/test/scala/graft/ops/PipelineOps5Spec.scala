@@ -378,6 +378,19 @@ class PipelineOps5Spec extends SparkSpec {
     exact.foreach { case (id, e) => assert(out(id)._2 >= e, s"doc $id undercounts") }
   }
 
+  test("ngramOverlapScreen: numBits 2^24 + 1 is refused, 2^24 runs") {
+    val docs = Seq((0L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
+    def screen(numBits: Int) =
+      TextAnalysis.ngramOverlapScreen(docs, "doc_id", "text", docs, "text", n = 5, numBits = numBits)
+    val e = intercept[IllegalArgumentException](screen((1 << 24) + 1))
+    assert(e.getMessage.contains("numBits=16777217 exceeds the inlined-bitmap bound 2^24"))
+    assert(e.getMessage.contains("Sketch.writeBloomIndex"))
+    // 6 tokens → 2 five-grams, both in the benchmark copy of the same text
+    val out = screen(1 << 24).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSeq
+    assert(out == Seq((0L, 2L, 2L, true)))
+  }
+
   test("decontaminatedSplit: eval twins quarantined, clean train passes, eval intact") {
     // arm assignment is hash-determined: discover ids per arm first
     val labels = Sampling.splitByHash(spark.range(0, 60).toDF("id"),

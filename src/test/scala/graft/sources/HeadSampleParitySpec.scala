@@ -14,7 +14,9 @@ import TypeInference.{MaxSampleSize, inferForDataFrame, inferForRows}
   * `inferSchema=false` (the all-string frame with `na.fill("")`), and the
   * LTSV and XLSX all-string frames, each inferred through
   * [[TypeInference.inferForDataFrame]]. The typed tables must then agree
-  * cell for cell. */
+  * cell for cell. The scans a single-split open runs on the driver — the
+  * quoted-newline test and the LTSV key union — must equal their Spark
+  * twins on every file here. */
 class HeadSampleParitySpec extends SparkSpec {
 
   private def caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
@@ -32,7 +34,14 @@ class HeadSampleParitySpec extends SparkSpec {
     assert(now.collect().toSeq == before.collect().toSeq)
   }
 
+  private def assertDriverScanParity(path: String): Unit = {
+    val readable = Compression.sparkReadablePath(path)
+    assert(CsvSource.detectQuotedNewlines(readable) == CsvSource.detectQuotedNewlines(spark, readable), path)
+    assert(LtsvSource.scanLocal(readable)._1 == LtsvSource.sparkKeys(LtsvSource.parse(spark, readable)), path)
+  }
+
   private def assertCsvParity(path: String, delim: String = ","): Unit = {
+    assertDriverScanParity(path)
     val readable = Compression.sparkReadablePath(path)
     val ml = CsvSource.detectQuotedNewlines(spark, readable)
     val spark0 = spark.read.option("header", "true").option("sep", delim)
@@ -50,10 +59,13 @@ class HeadSampleParitySpec extends SparkSpec {
   }
 
   private def assertLtsvParity(path: String): Unit = {
-    val spark0 = LtsvSource.read(spark, path, inferTypes = false)
-    val keys = spark0.columns.toSeq
-    val sample = LtsvSource.headRows(Compression.sparkReadablePath(path), keys)
+    assertDriverScanParity(path)
+    val readable = Compression.sparkReadablePath(path)
+    val keys = LtsvSource.sparkKeys(LtsvSource.parse(spark, readable))
+    val spark0 = LtsvSource.read(spark, path, inferTypes = false, knownKeys = Some(keys))
+    val sample = LtsvSource.headRows(readable, keys)
     assert(sample == spark0.head(MaxSampleSize).toSeq.map(_.toSeq.map(_.toString)), path)
+    assert(LtsvSource.scanLocal(readable)._2 == sample, path)
     val inferred = inferForDataFrame(spark0)
     assert(inferForRows(keys, sample) == inferred, path)
     sameTable(LtsvSource.read(spark, path), TypeInference.applyTypes(spark0, inferred))
@@ -141,6 +153,31 @@ class HeadSampleParitySpec extends SparkSpec {
     val dir = tmpDir("par-ltsv")
     assertLtsvParity(write(dir, "l.ltsv",
       "\uFEFFa:1\tb:x\n\n   \na:2\ta:3\turl:http://h:80\nb:\tc\n"))
+  }
+
+  test("driver newline scan and LTSV key union equal their Spark twins") {
+    val dir = tmpDir("par-driver")
+    val contents = Seq(
+      "lf" -> "id,v\n1,\"a\nb\"\n2,c\n",
+      "crlf" -> "id,v\r\n1,\"a\r\nb\"\r\n2,c\r\n",
+      "cr" -> "id,v\r1,\"a\rb\"\r2,c\r",
+      "cr-plain" -> "id,v\r1,a\r2,c\r",
+      "bom" -> "\uFEFF\"id\",v\n1,2\n",
+      "odd-last" -> "id,v\n1,2\n3,\"x",
+      "unquoted-quote" -> "id,v\n1,ab\"c\n2,d\n",
+      "blanks" -> "\n  \n\nid,v\n\n1,2\n   \n\t\n3,4",
+      "ltsv-crlf" -> "a:1\tb:x\r\n\r\nb:2\tc:3\r\n",
+      "ltsv-cr" -> "a:1\tb:x\r\rb:2\tc:3\r",
+      "ltsv-bom" -> "\uFEFFa:1\tb:2\n",
+      "ltsv-edges" -> "a:1\t\nb:2\tnocolon\n  \n\t\nc:\td:4:5")
+    for ((name, content) <- contents; ext <- "" +: Compression.All.map(_.ext))
+      assertDriverScanParity(write(dir, s"$name.txt$ext", content))
+    // the answers themselves, not only their agreement
+    val byName = contents.toMap
+    assert(CsvSource.detectQuotedNewlines(write(dir, "odd.csv", byName("odd-last"))))
+    assert(!CsvSource.detectQuotedNewlines(write(dir, "crp.csv", byName("cr-plain"))))
+    assert(LtsvSource.scanLocal(write(dir, "e.ltsv", byName("ltsv-edges")))._1 ==
+      Seq("", "a", "b", "c", "d", "nocolon"))
   }
 
   test("XLSX: short rows, long rows, padded header names") {
