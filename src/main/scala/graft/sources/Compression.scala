@@ -26,6 +26,9 @@ object Compression {
 
   sealed trait Codec {
     def ext: String
+    /** Decodes every member / stream / frame of a concatenated file
+      * (`cat a.gz b.gz`, pigz, pbzip2, `gzip >>`), as Hadoop's codecs and
+      * the command-line tools do — not only the first. */
     def wrapRead(in: InputStream): InputStream
     def wrapWrite(out: OutputStream): OutputStream
     /** Hadoop decodes this extension natively inside Spark text/csv reads. */
@@ -34,17 +37,17 @@ object Compression {
 
   case object Gzip extends Codec {
     val ext = ".gz"; val sparkNative = true
-    def wrapRead(in: InputStream) = new GzipCompressorInputStream(in)
+    def wrapRead(in: InputStream) = new GzipCompressorInputStream(in, true)
     def wrapWrite(out: OutputStream) = new GzipCompressorOutputStream(out)
   }
   case object Bzip2 extends Codec {
     val ext = ".bz2"; val sparkNative = true
-    def wrapRead(in: InputStream) = new BZip2CompressorInputStream(in)
+    def wrapRead(in: InputStream) = new BZip2CompressorInputStream(in, true)
     def wrapWrite(out: OutputStream) = new BZip2CompressorOutputStream(out)
   }
   case object Xz extends Codec {
     val ext = ".xz"; val sparkNative = false
-    def wrapRead(in: InputStream) = new XZCompressorInputStream(in)
+    def wrapRead(in: InputStream) = new XZCompressorInputStream(in, true)
     def wrapWrite(out: OutputStream) = new XZCompressorOutputStream(out)
   }
   case object Zstd extends Codec {

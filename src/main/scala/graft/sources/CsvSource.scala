@@ -25,8 +25,10 @@ import graft.DuplicateColumnError
   * a sampling job runs. The quoted-newline scan (skipped with
   * `multiLine = Some(…)`) runs on the driver when Spark would read the
   * file in one split ([[Compression.singleSplit]]) — an open then
-  * launches no Spark job — and as a Spark job otherwise, so a large file
-  * stays line-splittable. The bulk load is a distributed scan. gz/bz2
+  * launches no Spark job — and as a Spark job otherwise. Both give the
+  * same answer; above the bound the Spark job scans the splits in
+  * parallel, where the driver would read the whole file on one thread.
+  * The bulk load is a distributed scan. gz/bz2
   * decode inside Spark; xz/zst via the one-time shim in [[Compression]].
   */
 object CsvSource {
@@ -78,7 +80,8 @@ object CsvSource {
   }
 
   /** @param multiLine None = auto-detect via [[detectQuotedNewlines]]:
-    *   on the driver for a single-split file, as a Spark job otherwise.
+    *   on the driver for a single-split file, as a parallel Spark job
+    *   otherwise (same answer either way).
     *   Files with embedded newlines inside quoted fields (which
     *   [[graft.sinks.Dump]] legitimately writes) need multiLine parsing or
     *   they silently split into corrupt rows; files without them stay on

@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.DataFrame
@@ -27,6 +28,19 @@ class HeadSampleParitySpec extends SparkSpec {
     val out = Compression.openWrite(p.toString)
     try out.write(content.getBytes("UTF-8")) finally out.close()
     p.toString
+  }
+
+  /** `parts`, each compressed as its own member / stream / frame with the
+    * codec of `name`'s extension, concatenated into one file. */
+  private def writeMembers(dir: Path, name: String, parts: Seq[String]): String = {
+    val codec = Compression.forPath(name).get
+    val members = parts.map { part =>
+      val buf = new ByteArrayOutputStream
+      val out = codec.wrapWrite(buf)
+      try out.write(part.getBytes("UTF-8")) finally out.close()
+      buf.toByteArray
+    }
+    Files.write(dir.resolve(name), Array.concat(members: _*)).toString
   }
 
   private def sameTable(now: DataFrame, before: DataFrame): Unit = {
@@ -178,6 +192,24 @@ class HeadSampleParitySpec extends SparkSpec {
     assert(!CsvSource.detectQuotedNewlines(write(dir, "crp.csv", byName("cr-plain"))))
     assert(LtsvSource.scanLocal(write(dir, "e.ltsv", byName("ltsv-edges")))._1 ==
       Seq("", "a", "b", "c", "d", "nocolon"))
+  }
+
+  test("concatenated gz/bz2/xz/zst files: the driver scans read every member") {
+    val dir = tmpDir("par-members")
+    // the quoted newline and the extra LTSV key sit only in the second member
+    val csv = Seq("id,v\n1,a\n", "2,\"x\ny\"\n3,z\n")
+    val ltsv = Seq("a:1\tb:x\n", "a:2\tc:3\n")
+    for (ext <- Compression.All.map(_.ext)) {
+      val csvPath = writeMembers(dir, s"m.csv$ext", csv)
+      assert(CsvSource.detectQuotedNewlines(Compression.sparkReadablePath(csvPath)), csvPath)
+      assertCsvParity(csvPath)
+      assert(CsvSource.readCsv(spark, csvPath, inferTypes = false).collect().toSeq.map(_.toSeq) ==
+        Seq(Seq("1", "a"), Seq("2", "x\ny"), Seq("3", "z")), csvPath)
+      val ltsvPath = writeMembers(dir, s"m.ltsv$ext", ltsv)
+      assertLtsvParity(ltsvPath)
+      assert(LtsvSource.read(spark, ltsvPath, inferTypes = false).collect().toSeq.map(_.toSeq) ==
+        Seq(Seq("1", "x", ""), Seq("2", "", "3")), ltsvPath)
+    }
   }
 
   test("XLSX: short rows, long rows, padded header names") {
