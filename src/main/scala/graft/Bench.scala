@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry (driver contract): run every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
   *
@@ -51,25 +49,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
     val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // let AQE re-partition CACHED plans (default false in Spark 4.1 for
-      // partitioning-compat only): without it every .persist()/.cache()
-      // in a query path materializes its exchanges at the RAW shuffle
-      // width — at cpus=32 that was 32 near-empty tasks per cached
-      // exchange (e19: 231 tasks/36 s summed task time → 32 tasks/3 s;
-      // t20: 121 → 24 tasks — r13 one-JVM A/B). Scale-neutral: results
-      // are partition-count independent and a cluster deployment wants
-      // coalesced cached plans for the same reason.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(cpus, cpus, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     // warmup: session, file index, codegen paths

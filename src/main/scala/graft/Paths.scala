@@ -11,11 +11,6 @@ object Paths {
     ()
   }
 
-  /** Test/profiler seam: forces the [[scratchDir]] root, bypassing the
-    * env/shm policy (used by the Profile12 tmpfs-vs-disk A/B, which the
-    * shm-preferring policy would otherwise make a null comparison). */
-  @volatile private[graft] var scratchRootOverride: Option[java.nio.file.Path] = None
-
   /** Root under which [[scratchDir]] allocates: `SPARK_GRAFT_SCRATCH`
     * when set; else `/dev/shm` when present and writable; else
     * `java.io.tmpdir`. Scratch state here is ephemeral per-process
@@ -25,9 +20,8 @@ object Paths {
     * /tmp (r12 one-JVM A/B: e09/e12/e14/e15 each 0.3–0.5 s faster on
     * tmpfs). Parameterised so a deployment with big scratch artifacts
     * or small RAM pins it back to disk. */
-  private def scratchRoot: java.nio.file.Path = {
-    val pick = scratchRootOverride
-      .orElse(sys.env.get("SPARK_GRAFT_SCRATCH").map(java.nio.file.Paths.get(_)))
+  private[graft] def scratchRoot: java.nio.file.Path = {
+    val pick = sys.env.get("SPARK_GRAFT_SCRATCH").map(java.nio.file.Paths.get(_))
       .orElse {
         val shm = java.nio.file.Paths.get("/dev/shm")
         if (java.nio.file.Files.isDirectory(shm) &&
@@ -38,25 +32,34 @@ object Paths {
     pick
   }
 
-  /** Temp directory removed RECURSIVELY at JVM exit. The common
-    * `deleteOnExit()` idiom silently leaks non-empty directories
-    * (`File.delete` only removes empty ones) — every scratch dir that
-    * accumulates written data (parquet indexes, exports, stream feeds)
-    * must use this instead. Allocated under [[scratchRoot]]. */
-  def scratchDir(prefix: String): java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
+  /** One directory per JVM under `root`, created on first use and removed
+    * RECURSIVELY by a single shutdown hook. Every scratch dir is
+    * allocated inside it, so a JVM registers one hook per root however
+    * many dirs it allocates (every screen gate, memory-sink stream and
+    * spec allocates one or more). The common `deleteOnExit()` idiom
+    * would silently leak non-empty directories (`File.delete` only
+    * removes empty ones). */
+  private def jvmDir(root: java.nio.file.Path): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(root, "graft-jvm-")
     Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir.toFile)))
     dir
   }
+
+  private lazy val jvmScratch: java.nio.file.Path = jvmDir(scratchRoot)
+
+  private lazy val jvmDiskScratch: java.nio.file.Path =
+    jvmDir(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+
+  /** Fresh temp directory under [[scratchRoot]], removed with the rest
+    * of this JVM's scratch at exit. Every scratch dir that accumulates
+    * written data (parquet indexes, exports, stream feeds) uses this. */
+  def scratchDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(jvmScratch, prefix)
 
   /** [[scratchDir]] pinned to `java.io.tmpdir` (disk) regardless of the
     * shm policy — for GB-scale artifacts (ScaleProbe's 6M-row index
     * builds) where a RAM-backed root would compete with the JVM for
     * memory and an OOM-killed run would strand gigabytes in tmpfs. */
-  def diskScratchDir(prefix: String): java.nio.file.Path = {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")), prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir.toFile)))
-    dir
-  }
+  def diskScratchDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(jvmDiskScratch, prefix)
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected queries so
   * pushdown / broadcast / shuffle structure can be audited.
   * Usage: runMain graft.PlanCheck <sfDir> <queryName>... */
@@ -9,13 +7,7 @@ object PlanCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q01_pricing_agg", "q03_join_revenue")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(8, 8, "graft-plancheck")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n================ $n ================")

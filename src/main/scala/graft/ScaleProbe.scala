@@ -8,11 +8,7 @@ import graft.ops.{Dedup, TextAnalysis}
   * the same plan shapes. Usage: runMain graft.ScaleProbe */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Harness.session(16, 32, "graft-scaleprobe")
     spark.sparkContext.setLogLevel("ERROR")
     // standalone-block fast path: `runMain graft.ScaleProbe fuzzy` runs
     // only the named self-contained block (iteration must not pay the

@@ -1,21 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.Files
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE may re-partition cached plans (see Bench.scala: without this
-      // every .persist() materializes at raw shuffle width)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Harness.session(cpus, cpus, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // comma-separated subset for fast local iteration (the driver never
@@ -59,7 +50,7 @@ object Verify {
     // bit-identical to the sequential run. SPARK_GRAFT_VERIFY_WORKERS=1
     // restores strictly sequential execution.
     val workers = sys.env.get("SPARK_GRAFT_VERIFY_WORKERS").map(_.toInt)
-      .getOrElse(math.min(4, math.max(1, cpus.toInt / 2)))
+      .getOrElse(math.min(4, math.max(1, cpus / 2)))
     require(workers >= 1, s"SPARK_GRAFT_VERIFY_WORKERS=$workers must be >= 1")
     val t0 = System.nanoTime()
     val done = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Tables
 import graft.ops.{Audio, Bpe, Chunking, Dedup, Funnel, FuzzyJoin, Lm, Multimodal, Pii, Profile, Ranking, Sampling, Similarity, TextAnalysis, Unigram, Web}
@@ -414,6 +415,26 @@ object PipelineQueries {
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
     try f finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
+
+  /** Drive a screen gate's feeds through file-source streams, in order:
+    * each `(tag, feed)` is written `coalesce(1)` to `base/feed<tag>` (one
+    * file, so it arrives as ONE micro-batch), read back with the feed's
+    * own schema, started by `start(tag, stream, checkpoint)` on
+    * `base/ck<tag>` and drained before the next feed is written — a
+    * later feed screens against what the earlier ones admitted. Runs
+    * under 4 shuffle partitions ([[withShufflePartitions]]). */
+  private def runFeeds(s: SparkSession, base: java.nio.file.Path,
+      feeds: Seq[(String, DataFrame)])(
+      start: (String, DataFrame, String) => StreamingQuery): Unit =
+    withShufflePartitions(s, 4) {
+      feeds.foreach { case (tag, feed) =>
+        val p = base.resolve(s"feed$tag").toString
+        feed.coalesce(1).write.parquet(p)
+        val q = start(tag, s.readStream.schema(feed.schema).parquet(p),
+          base.resolve(s"ck$tag").toString)
+        try q.processAllAvailable() finally q.stop()
+      }
+    }
 
   /** Deterministic 64-bit signature from a doc id, expressible in BOTH
     * Spark and ANSI-ish DuckDB SQL (XOR/CASE/shift on small values only —
@@ -2495,22 +2516,10 @@ object PipelineQueries {
           col("crn") === (col("rn") * 31) % 379 + 1)
         .select(col("doc_id"), (col("rn") % 3).as("third"), col("content"))
       Dedup.writeDigestIndex(assigned.filter(col("third") === 0), "content", idx)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content",
-          org.apache.spark.sql.types.StringType)))
-      withShufflePartitions(s, 4) {
-        Seq(1, 2).foreach { r =>
-          val p = base.resolve(s"feed$r")
-          assigned.filter(col("third") === r).select("doc_id", "content")
-            .coalesce(1).write.parquet(p.toString)
-          val q = EventStreams.streamingExactDedupScreen(
-            s.readStream.schema(schema).parquet(p.toString),
-            "content", "doc_id", idx, outP,
-            base.resolve(s"ck$r").toString)
-          try q.processAllAvailable() finally q.stop()
-        }
+      runFeeds(s, base, Seq(1, 2).map(r =>
+          r.toString -> assigned.filter(col("third") === r).select("doc_id", "content"))) {
+        (_, stream, ck) =>
+          EventStreams.streamingExactDedupScreen(stream, "content", "doc_id", idx, outP, ck)
       }
       s.read.parquet(outP)
         .select(col("doc_id"), md5(col("content")).as("content_md5"))
@@ -2533,22 +2542,10 @@ object PipelineQueries {
       val outP = base.resolve("out").toString
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       Lm.writeLmIndex(d.filter(col("doc_id") % 2 === 0), "doc_id", "text", lmP)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      withShufflePartitions(s, 4) {
-        Seq(1, 3).foreach { r =>
-          val p = base.resolve(s"feed$r")
-          d.filter(col("doc_id") % 4 === r)
-            .coalesce(1).write.parquet(p.toString)
-          val q = EventStreams.streamingLmScreen(
-            s.readStream.schema(schema).parquet(p.toString),
-            "doc_id", "text", lmP, outP, minScore = 0.0335,
-            base.resolve(s"ck$r").toString)
-          try q.processAllAvailable() finally q.stop()
-        }
+      runFeeds(s, base, Seq(1, 3).map(r => r.toString -> d.filter(col("doc_id") % 4 === r))) {
+        (_, stream, ck) =>
+          EventStreams.streamingLmScreen(stream, "doc_id", "text", lmP, outP,
+            minScore = 0.0335, ck)
       }
       s.read.parquet(outP).distinct()
         .select(col("doc_id"), col("n_bigrams"), col("lm_score"))
@@ -2575,23 +2572,10 @@ object PipelineQueries {
         size(array_distinct(graft.ops.TextAnalysis.tokens(col("text")))) >= 26
       graft.ops.Importance.writeImportanceModel(
         even, even.filter(isTarget), "doc_id", "text", mP, numBuckets = 256)
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      withShufflePartitions(s, 4) {
-        Seq(1, 3).foreach { r =>
-          val p = base.resolve(s"feed$r")
-          d.filter(col("doc_id") % 4 === r)
-            .coalesce(1).write.parquet(p.toString)
-          val q = EventStreams.streamingImportanceScreen(
-            s.readStream.schema(schema).parquet(p.toString),
-            "doc_id", "text", mP, outP, scale = 1000000L,
-            minNum = 99L, minDen = 100L,
-            base.resolve(s"ck$r").toString)
-          try q.processAllAvailable() finally q.stop()
-        }
+      runFeeds(s, base, Seq(1, 3).map(r => r.toString -> d.filter(col("doc_id") % 4 === r))) {
+        (_, stream, ck) =>
+          EventStreams.streamingImportanceScreen(stream, "doc_id", "text", mP, outP,
+            scale = 1000000L, minNum = 99L, minDen = 100L, ck)
       }
       s.read.parquet(outP).distinct()
         .select(col("doc_id"), col("n_grams"), col("score"))
@@ -2632,20 +2616,8 @@ object PipelineQueries {
         .select(d, sawtoothPayload(d - 50, 11, lit(true)).as("content"))
         .unionByName(ids.filter(d >= 450 && d < 470)
           .select(d, sawtoothPayload(d, 13, lit(false)).as("content")))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("content",
-          org.apache.spark.sql.types.BinaryType)))
-      withShufflePartitions(s, 4) {
-        Seq((1, feed1), (2, feed2)).foreach { case (r, f) =>
-          val p = base.resolve(s"feed$r")
-          f.coalesce(1).write.parquet(p.toString)
-          val q = EventStreams.streamingMediaScreen(
-            s.readStream.schema(schema).parquet(p.toString),
-            "doc_id", "content", idxP, outP, base.resolve(s"ck$r").toString)
-          try q.processAllAvailable() finally q.stop()
-        }
+      runFeeds(s, base, Seq("1" -> feed1, "2" -> feed2)) { (_, stream, ck) =>
+        EventStreams.streamingMediaScreen(stream, "doc_id", "content", idxP, outP, ck)
       }
       s.read.parquet(outP).distinct()
         .select(col("id").as("doc_id"), col("ph"))
@@ -2688,20 +2660,8 @@ object PipelineQueries {
           typoName(novelName(col("i")), col("i") + 1L).as("name"))
         .unionByName(s.range(8).select(col("id").as("i"))
           .select((col("i") + 400000L).as("id"), freshName(col("i")).as("name")))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("name",
-          org.apache.spark.sql.types.StringType)))
-      withShufflePartitions(s, 4) {
-        Seq((1, feed1), (2, feed2)).foreach { case (r, f) =>
-          val p = base.resolve(s"feed$r")
-          f.coalesce(1).write.parquet(p.toString)
-          val q = EventStreams.streamingEntityScreen(
-            s.readStream.schema(schema).parquet(p.toString),
-            "id", "name", idxP, outP, base.resolve(s"ck$r").toString)
-          try q.processAllAvailable() finally q.stop()
-        }
+      runFeeds(s, base, Seq("1" -> feed1, "2" -> feed2)) { (_, stream, ck) =>
+        EventStreams.streamingEntityScreen(stream, "id", "name", idxP, outP, ck)
       }
       s.read.parquet(outP).distinct().orderBy(col("id"))
     }),
@@ -2739,22 +2699,9 @@ object PipelineQueries {
           scaledBy(1.5).as("embedding"))
         .unionByName(e.filter(vid >= 450 && vid < 470).select(vid.as("vec_id"),
           col("embedding").cast("array<double>").as("embedding")))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))
-      withShufflePartitions(s, 4) {
-        Seq((1, feed1), (2, feed2)).foreach { case (r, f) =>
-          val p = base.resolve(s"feed$r")
-          f.coalesce(1).write.parquet(p.toString)
-          val q = EventStreams.streamingEmbeddingScreen(
-            s.readStream.schema(schema).parquet(p.toString),
-            "vec_id", "embedding", idxP, outP,
-            base.resolve(s"ck$r").toString, threshold = 0.95)
-          try q.processAllAvailable() finally q.stop()
-        }
+      runFeeds(s, base, Seq("1" -> feed1, "2" -> feed2)) { (_, stream, ck) =>
+        EventStreams.streamingEmbeddingScreen(stream, "vec_id", "embedding", idxP, outP,
+          ck, threshold = 0.95)
       }
       s.read.parquet(outP).select(col("id").as("vec_id")).distinct()
         .orderBy(col("vec_id"))
@@ -3213,21 +3160,8 @@ object PipelineQueries {
         ("r1", ev.filter(col("event_id") % 3 === 1).select(col("event_type"), col("v"))),
         ("r2", ev.filter(col("event_id") % 3 === 2)
           .select(col("event_type"), (col("v") + 100000000L).as("v"))))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.LongType)))
-      withShufflePartitions(s, 4) {
-        feeds.foreach { case (runId, df) =>
-          val p = base.resolve(s"feed$runId")
-          df.coalesce(1).write.parquet(p.toString)
-          val q = EventStreams.streamingDriftScreen(
-            s.readStream.schema(schema).parquet(p.toString),
-            "event_type", "v", idx, tel,
-            base.resolve(s"ck$runId").toString, runId)
-          try q.processAllAvailable() finally q.stop()
-        }
+      runFeeds(s, base, feeds) { (runId, stream, ck) =>
+        EventStreams.streamingDriftScreen(stream, "event_type", "v", idx, tel, ck, runId)
       }
       // distinct: telemetry is at-least-once with content-identical
       // duplicates by design (none in a clean run — e15's hygiene)
@@ -3387,8 +3321,6 @@ object PipelineQueries {
     "e11_streaming_cdc" -> ((s, dir) => {
       val base = graft.Paths.scratchDir("graft-cdc-")
       val snap = base.resolve("snapshot").toString
-      val changesDir = base.resolve("changes").toString
-      val ckpt = base.resolve("ckpt").toString
       val o = Tables.load(s, dir, "orders")
       o.write.parquet(snap)
       val u = o.filter(col("o_orderkey") % 11 === 0)
@@ -3404,12 +3336,8 @@ object PipelineQueries {
       // single micro-batch — split across batches, a same-key D(seq 3)
       // could precede its U(seq 2) and applyChanges would resurrect the
       // deleted row (cross-batch ordering is the producer's contract)
-      changes.coalesce(1).write.parquet(changesDir)
-      withShufflePartitions(s, 4) {
-        val stream = s.readStream.schema(changes.schema).parquet(changesDir)
-        val q = EventStreams.streamingApplyChanges(
-          stream, snap, Seq("o_orderkey"), ckpt)
-        try { q.processAllAvailable() } finally q.stop()
+      runFeeds(s, base, Seq("" -> changes)) { (_, stream, ck) =>
+        EventStreams.streamingApplyChanges(stream, snap, Seq("o_orderkey"), ck)
       }
       s.read.parquet(snap)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -3439,24 +3367,8 @@ object PipelineQueries {
         .select(col("event_type"), col("value"))
       graft.ops.Sketch.writeBloomIndex(third(0), "event_type", "value", idx,
         numBits = 65536, numHashes = 3)
-      val feeds = Seq(1, 2).map { r =>
-        val p = base.resolve(s"feed$r")
-        third(r).coalesce(1).write.parquet(p.toString)
-        p.toString
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.StringType)))
-      withShufflePartitions(s, 4) {
-        feeds.zipWithIndex.foreach { case (feed, i) =>
-          val q = EventStreams.streamingBloomScreen(
-            s.readStream.schema(schema).parquet(feed),
-            "event_type", "value", idx, outP,
-            base.resolve(s"ck$i").toString)
-          try q.processAllAvailable() finally q.stop()
-        }
+      runFeeds(s, base, Seq(1, 2).map(r => r.toString -> third(r))) { (_, stream, ck) =>
+        EventStreams.streamingBloomScreen(stream, "event_type", "value", idx, outP, ck)
       }
       s.read.parquet(outP).distinct()
         .orderBy(col("event_type"), col("value"))

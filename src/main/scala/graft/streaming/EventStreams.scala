@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamReader
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Event/time-series operators over the `events` table shape
@@ -15,6 +15,11 @@ import org.apache.spark.sql.types._
   * partial aggregation; watermarks bound state for streaming;
   * sessionization uses `session_window` (streaming-capable) or a
   * lag-based batch formulation for exact oracle checks.
+  *
+  * The foreachBatch operators (CDC materialization and the admission
+  * screens) all run on [[screen]], and every screen with a persisted
+  * index writes through [[admit]]: the out-before-index write ordering
+  * and its crash argument are defined there, once.
   */
 object EventStreams {
 
@@ -160,6 +165,66 @@ object EventStreams {
     intervalJoin(left, right, key, leftTs, rightTs, before,
       Some(watermark), "left_outer")
 
+  /** The one streaming skeleton of this object's foreachBatch operators:
+    * `body` runs on the driver for each micro-batch and its id, and the
+    * checkpoint commits a batch only after `body` returns, so a batch
+    * whose body threw (or whose JVM died mid-body) is REPLAYED on a
+    * restart from the same checkpoint. Screens with a persisted index
+    * order their writes through [[admit]]. */
+  private[streaming] def screen(stream: DataFrame, checkpoint: String)(
+      body: (Dataset[Row], Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(body)
+      .start()
+
+  /** Admit a screened micro-batch: persist `admitted`, append
+    * `project(admitted)` to the `outPath` parquet feed, THEN run `absorb`
+    * (the screen's index append) on the full persisted frame, then
+    * unpersist. This is the one place the screens' write ordering is
+    * defined, and the order is load-bearing: a crash between the two
+    * writes replays the batch ([[screen]]) against an index that does not
+    * hold it yet, so the replay admits the same rows again —
+    * at-least-once duplicates in `outPath`, never silently lost rows,
+    * which the reverse order would produce (the index would screen out
+    * rows that never reached the feed). Downstream reads dedup or
+    * tolerate duplicates, as with every foreachBatch parquet sink. A
+    * crash after `absorb` replays the batch too, so every screen's absorb
+    * must be idempotent or exactly-once under replay; each screen's
+    * scaladoc says which, and why. */
+  private[streaming] def admit(admitted: DataFrame, outPath: String,
+      project: DataFrame => DataFrame = identity)(absorb: DataFrame => Unit): Unit =
+    persisted(admitted) { a =>
+      project(a).write.mode("append").parquet(outPath)
+      absorb(a)
+    }
+
+  private def persisted[A](df: DataFrame)(f: DataFrame => A): A = {
+    val p = df.persist()
+    try f(p) finally p.unpersist()
+  }
+
+  /** In-batch dominance of the media, entity and embedding screens: rows
+    * whose `id` the index probe `matchedIds` names are rejected; of the
+    * rest, a row drops iff `dominatedIds` (computed over those survivors)
+    * names it because a SMALLER-id batch-mate matches it —
+    * deterministic and engine-replayable. Dominance, not transitive
+    * closure: in a chain a~b~c with a≁c both b and c drop although c's
+    * dominator b died — a conservative bias; a screen may drop extra
+    * near-dups but must never admit a matched one. What is left goes
+    * through [[admit]]. */
+  private def admitUndominated(rows: DataFrame, matchedIds: DataFrame,
+      dominatedIds: DataFrame => DataFrame, outPath: String,
+      project: DataFrame => DataFrame = identity)(absorb: DataFrame => Unit): Unit =
+    // persist, not localCheckpoint: the survivors feed both the dominance
+    // pairs and the admit anti-join (one probe, not two) and must stay
+    // RECOMPUTABLE — a lineage cut before the two writes is the r4
+    // executor-loss trap
+    persisted(rows.join(matchedIds, Seq("id"), "left_anti")) { afterIndex =>
+      admit(afterIndex.join(dominatedIds(afterIndex), Seq("id"), "left_anti"),
+        outPath, project)(absorb)
+    }
+
   /** Continuous CDC materialization: fold a change STREAM (target
     * columns + op I/U/D + monotone seq, the
     * [[graft.ops.Merge.applyChanges]] contract) into a parquet snapshot.
@@ -181,24 +246,21 @@ object EventStreams {
     * columns. */
   def streamingApplyChanges(changes: DataFrame, snapshotPath: String,
       keys: Seq[String], checkpoint: String, opCol: String = "op",
-      seqCol: String = "seq"): org.apache.spark.sql.streaming.StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val tmpPath0 = snapshotPath + ".merging"
-        // self-heal the swap's crash window (snapshot deleted, complete
-        // new copy still at .merging) — otherwise a restarted stream
-        // would throw on every replay and never recover
-        graft.ops.FsOps.healSwap(spark, tmpPath0, snapshotPath)
-        val target = spark.read.parquet(snapshotPath)
-        val merged = graft.ops.Merge.applyChanges(target, batch, keys, opCol, seqCol)
-        // materialize BEFORE the swap: merged still reads the old
-        // snapshot lazily
-        merged.write.mode("overwrite").parquet(tmpPath0)
-        graft.ops.FsOps.swapDirs(spark, tmpPath0, snapshotPath)
-      }
-      .start()
+      seqCol: String = "seq"): StreamingQuery =
+    screen(changes, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val tmpPath0 = snapshotPath + ".merging"
+      // self-heal the swap's crash window (snapshot deleted, complete
+      // new copy still at .merging) — otherwise a restarted stream
+      // would throw on every replay and never recover
+      graft.ops.FsOps.healSwap(spark, tmpPath0, snapshotPath)
+      val target = spark.read.parquet(snapshotPath)
+      val merged = graft.ops.Merge.applyChanges(target, batch, keys, opCol, seqCol)
+      // materialize BEFORE the swap: merged still reads the old
+      // snapshot lazily
+      merged.write.mode("overwrite").parquet(tmpPath0)
+      graft.ops.FsOps.swapDirs(spark, tmpPath0, snapshotPath)
+    }
 
   /** Continuous first-occurrence screen over a persisted Bloom index
     * ([[graft.ops.Sketch.writeBloomIndex]]): each micro-batch's DISTINCT
@@ -213,37 +275,26 @@ object EventStreams {
     * re-emitted — the Bloom no-false-negative guarantee; a small
     * deterministic fraction of genuinely-new values is falsely dropped
     * (classic Bloom false positives — size numBits for the tolerated
-    * rate). Order of writes is load-bearing: rows land in `outPath`
-    * BEFORE their bits land in the index, so a crash between the two
-    * replays the batch as at-least-once duplicates in `outPath`
-    * (bit_or re-append is idempotent) — never as silently lost rows,
-    * which the reverse order would produce. Downstream reads dedup or
-    * tolerate duplicates, as with every foreachBatch parquet sink. */
+    * rate). Ordering and replay: [[admit]]; the absorb is idempotent
+    * because bits are appended and combined by bit_or. */
   def streamingBloomScreen(stream: DataFrame, keyCol: String, valueCol: String,
       indexPath: String, outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        // null VALUES are dropped to mirror the index build side (which
-        // never stores them): a null probe reports definitely-absent,
-        // so without this filter a (key, null) pair would be re-admitted
-        // in EVERY batch — its bits can never be stored
-        val pairs = batch.select(col(keyCol), col(valueCol))
-          .filter(col(valueCol).isNotNull).distinct()
-        // probeBloomIndex heals the index's swap crash window first
-        val fresh = graft.ops.Sketch
-          .probeBloomIndex(spark, indexPath, pairs, keyCol, valueCol)
-          .filter(!col("may_contain"))
-          .select(col("key").as(keyCol), col("value").as(valueCol))
-          .persist()
-        try {
-          fresh.write.mode("append").parquet(outPath)
-          graft.ops.Sketch.appendToBloomIndex(fresh, keyCol, valueCol, indexPath)
-        } finally fresh.unpersist()
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    screen(stream, checkpoint) { (batch, _) =>
+      // null VALUES are dropped to mirror the index build side (which
+      // never stores them): a null probe reports definitely-absent,
+      // so without this filter a (key, null) pair would be re-admitted
+      // in EVERY batch — its bits can never be stored
+      val pairs = batch.select(col(keyCol), col(valueCol))
+        .filter(col(valueCol).isNotNull).distinct()
+      // probeBloomIndex heals the index's swap crash window first
+      val fresh = graft.ops.Sketch
+        .probeBloomIndex(batch.sparkSession, indexPath, pairs, keyCol, valueCol)
+        .filter(!col("may_contain"))
+        .select(col("key").as(keyCol), col("value").as(valueCol))
+      admit(fresh, outPath)(
+        graft.ops.Sketch.appendToBloomIndex(_, keyCol, valueCol, indexPath))
+    }
 
   /** Continuous EXACT first-occurrence screen over a persisted digest
     * index ([[graft.ops.Dedup.writeDigestIndex]]) — the
@@ -255,174 +306,120 @@ object EventStreams {
     * full digest set (~32 B/doc) instead of a bitmap; pick by whether a
     * deterministic small loss rate is acceptable.
     *
-    * Ordering/replay (the e15 reasoning class): rows land in `outPath`
-    * BEFORE their digests — a crash between the two replays the batch
-    * as at-least-once duplicates in the feed, never as silent loss.
-    * Digest re-append is harmless: membership is idempotent under
-    * duplicate digest rows ([[graft.ops.Dedup.compactDigestIndex]]
-    * restores one-row-per-digest). Null content is dropped, mirroring
-    * the index build side — a null digest never matches the anti-join,
-    * so an admitted null row would be re-admitted every batch. */
+    * Ordering and replay: [[admit]]; digest re-append is harmless:
+    * membership is idempotent under duplicate digest rows
+    * ([[graft.ops.Dedup.compactDigestIndex]] restores
+    * one-row-per-digest). Null content is dropped, mirroring the index
+    * build side — a null digest never matches the anti-join, so an
+    * admitted null row would be re-admitted every batch. */
   def streamingExactDedupScreen(stream: DataFrame, contentCol: String,
       idCol: String, indexPath: String, outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val fresh = graft.ops.Dedup.probeDigestIndex(spark, indexPath,
-          batch.filter(col(contentCol).isNotNull), contentCol, idCol)
-          .persist()
-        try {
-          fresh.write.mode("append").parquet(outPath)
-          graft.ops.Dedup.appendToDigestIndex(fresh, contentCol, indexPath)
-        } finally fresh.unpersist()
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    screen(stream, checkpoint) { (batch, _) =>
+      val fresh = graft.ops.Dedup.probeDigestIndex(batch.sparkSession, indexPath,
+        batch.filter(col(contentCol).isNotNull), contentCol, idCol)
+      admit(fresh, outPath)(
+        graft.ops.Dedup.appendToDigestIndex(_, contentCol, indexPath))
+    }
 
   /** Continuous PERCEPTUAL media admission screen over a persisted
     * phash index ([[graft.ops.Dedup.writePhashIndex]]) — the image-
     * crawl dedup loop: each micro-batch's payloads are hashed ONCE,
     * screened against the index (any band-match within the index's
     * `max_distance` → a re-encode of already-ingested media →
-    * rejected), then screened IN-batch by pairwise dominance (a row is
-    * dropped iff a SMALLER-id batch-mate band-matches it within
-    * distance — deterministic and engine-replayable; note it is
-    * dominance, not transitive closure: in a chain a~b~c with a≁c,
-    * both b and c drop even though c's dominator b died — documented
-    * conservative bias, a screen may drop extra near-dups but must
-    * never admit a matched one). Survivors append `(id, ph)` to the
-    * admitted feed and THEN their signatures to the index
-    * (out-before-index, the e18 ordering: a crash between the two
-    * replays as at-least-once duplicate feed rows with identical
-    * content — downstream dedups by id — never as loss; signature
-    * re-append is inert because probes `distinct()` the index). Later
+    * rejected), then screened IN-batch by pairwise dominance
+    * ([[admitUndominated]]: a row drops iff a SMALLER-id batch-mate
+    * band-matches it within distance). Survivors append `(id, ph)` to
+    * the admitted feed and THEN their signatures to the index. Later
     * batches screen against the GROWN index, so a re-encode of media
-    * admitted two batches ago is rejected. Null payloads / null
-    * hashes are dropped (nothing to perceive). */
+    * admitted two batches ago is rejected. Ordering and replay:
+    * [[admit]]; signature re-append is inert because probes
+    * `distinct()` the index. Null payloads / null hashes are dropped
+    * (nothing to perceive). */
   def streamingMediaScreen(stream: DataFrame, idCol: String,
       payloadCol: String, indexPath: String, outPath: String,
       checkpoint: String,
-      maxBucket: Int = Int.MaxValue): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val hashed = batch.filter(col(payloadCol).isNotNull)
+      maxBucket: Int = Int.MaxValue): StreamingQuery =
+    screen(stream, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      persisted(batch.filter(col(payloadCol).isNotNull)
           .select(col(idCol).as("id"),
             graft.functions.PngDecode.dhashDecoded(col(payloadCol)).as("ph"))
-          .filter(col("ph").isNotNull)
-          .persist()
-        try {
-          // ONE meta value per screen (memoized per path — the
-          // sidecar read happens once per JVM, not per micro-batch;
-          // the getter heals the swap crash window before its first
-          // read): the in-batch dominance pass below must band with
-          // the SAME distance the index probe uses
-          val maxDistance =
-            graft.ops.Dedup.phashIndexMaxDistance(spark, indexPath)
-          // `maxBucket` defaults to UNLIMITED: an admission screen must
-          // not trade recall silently — a dropped hot bucket would
-          // ADMIT matched media, and each wrong admission grows that
-          // bucket further (self-reinforcing). The cost of the default
-          // is per-batch probe work ∝ batch size × the HOTTEST index
-          // bucket, which grows with the ingested corpus under
-          // boilerplate-alike media: a long-lived screen facing that
-          // skew should pass a bound here (accepting the documented
-          // recall trade on those buckets) or route such media through
-          // exact dedup first.
-          // no distinct: left_anti ignores build-side duplicates, and the
-          // probe's per-id fan-out is banding-bounded — the dedup was one
-          // whole exchange+aggregate per micro-batch for nothing (r13)
-          val matchedIds = graft.ops.Dedup
-            .probePhashSignaturesAt(spark, indexPath, hashed, maxDistance,
-              maxBucket = maxBucket, hashKind = graft.ops.Dedup.DhashHashKind)
-            .select(col("batch_id").as("id"))
-          // persist, not localCheckpoint: afterIndex feeds both the
-          // dominance pairs and the admit anti-join (one probe, not
-          // two) and stays RECOMPUTABLE — a lineage cut before the
-          // two writes is the r4 executor-loss trap
-          val afterIndex = hashed.join(matchedIds, Seq("id"), "left_anti")
-            .persist()
-          try {
-            // pairwise dominance via the band pair machinery: every
-            // (a < b) within-distance pair dominates b (same maxBucket
-            // policy as the index probe above)
-            val dominated = graft.ops.Dedup
-              .simhashPairs(afterIndex, "id", "ph", maxDistance,
-                maxBucket = maxBucket)
-              .select(col("id_b").as("id"))
-            val admitted = afterIndex.join(dominated, Seq("id"), "left_anti")
-              .persist()
-            try {
-              admitted.write.mode("append").parquet(outPath)
-              graft.ops.Dedup.appendPhashSignatures(admitted, indexPath,
-                graft.ops.Dedup.DhashHashKind)
-            } finally admitted.unpersist()
-          } finally afterIndex.unpersist()
-        } finally hashed.unpersist()
+          .filter(col("ph").isNotNull)) { hashed =>
+        // ONE meta value per screen (memoized per path — the
+        // sidecar read happens once per JVM, not per micro-batch;
+        // the getter heals the swap crash window before its first
+        // read): the in-batch dominance pass below must band with
+        // the SAME distance the index probe uses
+        val maxDistance =
+          graft.ops.Dedup.phashIndexMaxDistance(spark, indexPath)
+        // `maxBucket` defaults to UNLIMITED: an admission screen must
+        // not trade recall silently — a dropped hot bucket would
+        // ADMIT matched media, and each wrong admission grows that
+        // bucket further (self-reinforcing). The cost of the default
+        // is per-batch probe work ∝ batch size × the HOTTEST index
+        // bucket, which grows with the ingested corpus under
+        // boilerplate-alike media: a long-lived screen facing that
+        // skew should pass a bound here (accepting the documented
+        // recall trade on those buckets) or route such media through
+        // exact dedup first.
+        // no distinct: left_anti ignores build-side duplicates, and the
+        // probe's per-id fan-out is banding-bounded — the dedup was one
+        // whole exchange+aggregate per micro-batch for nothing (r13)
+        val matchedIds = graft.ops.Dedup
+          .probePhashSignaturesAt(spark, indexPath, hashed, maxDistance,
+            maxBucket = maxBucket, hashKind = graft.ops.Dedup.DhashHashKind)
+          .select(col("batch_id").as("id"))
+        // pairwise dominance via the band pair machinery: every (a < b)
+        // within-distance pair dominates b (same maxBucket policy as the
+        // index probe above)
+        admitUndominated(hashed, matchedIds, afterIndex => graft.ops.Dedup
+            .simhashPairs(afterIndex, "id", "ph", maxDistance, maxBucket = maxBucket)
+            .select(col("id_b").as("id")), outPath)(
+          graft.ops.Dedup.appendPhashSignatures(_, indexPath,
+            graft.ops.Dedup.DhashHashKind))
       }
-      .start()
+    }
 
   /** Continuous ENTITY-RESOLUTION admission screen over a persisted
     * deletion-variant index ([[graft.ops.FuzzyJoin.writeFuzzyIndex]]) —
     * the master-data ingest loop: each micro-batch's names probe the
     * index at the STORED depth (any match within Levenshtein ≤ depth →
     * a spelling of an already-known entity → rejected), then screen
-    * IN-batch by pairwise dominance (a row drops iff a SMALLER-id
-    * batch-mate is within depth — deterministic, engine-replayable;
-    * dominance not transitive closure, the e21 conservative-bias
-    * contract). Survivors append `(id, name)` to the admitted feed and
-    * THEN their deletion variants to the index (out-before-index, the
-    * e18 ordering: a crash between the two replays as at-least-once
-    * duplicate feed rows — probes match the survivors' own appended
-    * rows on replay and reject them, the r12 screen self-match
-    * semantics; never loss). Later batches screen against the GROWN
-    * catalog, so a typo of an entity admitted two batches ago is
-    * rejected. Null names are dropped (nothing to resolve). */
+    * IN-batch by pairwise dominance ([[admitUndominated]]: a row drops
+    * iff a SMALLER-id batch-mate is within depth). Survivors append
+    * `(id, name)` to the admitted feed and THEN their deletion variants
+    * to the index. Later batches screen against the GROWN catalog, so a
+    * typo of an entity admitted two batches ago is rejected. Ordering
+    * and replay: [[admit]]; a replay after the absorb is rejected, not
+    * re-admitted: its probe matches the survivors' own appended rows
+    * (the r12 screen self-match semantics). Null names are dropped
+    * (nothing to resolve). */
   def streamingEntityScreen(stream: DataFrame, idCol: String,
       nameCol: String, indexPath: String, outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val named = batch.filter(col(nameCol).isNotNull)
-          .select(col(idCol).as("id"), col(nameCol).as("name"))
-          .persist()
-        try {
-          // stored depth is memoized per JVM (one sidecar read per
-          // screen, not per micro-batch) and the getter heals the swap
-          // crash windows before its first read
-          val depth = graft.ops.FuzzyJoin.readFuzzyMeta(spark, indexPath)
-          // no distinct: left_anti ignores build-side duplicates (the
-          // media-screen rationale — one fewer exchange per micro-batch)
-          val matched = graft.ops.FuzzyJoin
-            .probeFuzzyIndex(spark, indexPath, named, "id", "name", depth)
-            .select(col("id"))
-          // persist, not localCheckpoint: afterIndex feeds the
-          // dominance pairs AND the admit anti-join and must stay
-          // recomputable (the r4 executor-loss trap)
-          val afterIndex = named.join(matched, Seq("id"), "left_anti")
-            .persist()
-          try {
-            val dominated = graft.ops.FuzzyJoin.fuzzyJoin(
-                afterIndex.select(col("id").as("__ida"), col("name").as("__na")),
-                afterIndex.select(col("id").as("__idb"), col("name").as("__nb")),
-                "__ida", "__na", "__idb", "__nb", maxDist = depth)
-              .filter(col("__ida") < col("__idb"))
-              .select(col("__idb").as("id"))
-            val admitted = afterIndex.join(dominated, Seq("id"), "left_anti")
-              .persist()
-            try {
-              admitted.write.mode("append").parquet(outPath)
-              graft.ops.FuzzyJoin.appendToFuzzyIndex(spark, indexPath,
-                admitted, "id", "name")
-            } finally admitted.unpersist()
-          } finally afterIndex.unpersist()
-        } finally named.unpersist()
+      checkpoint: String): StreamingQuery =
+    screen(stream, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      persisted(batch.filter(col(nameCol).isNotNull)
+          .select(col(idCol).as("id"), col(nameCol).as("name"))) { named =>
+        // stored depth is memoized per JVM (one sidecar read per
+        // screen, not per micro-batch) and the getter heals the swap
+        // crash windows before its first read
+        val depth = graft.ops.FuzzyJoin.readFuzzyMeta(spark, indexPath)
+        // no distinct: left_anti ignores build-side duplicates (the
+        // media-screen rationale — one fewer exchange per micro-batch)
+        val matched = graft.ops.FuzzyJoin
+          .probeFuzzyIndex(spark, indexPath, named, "id", "name", depth)
+          .select(col("id"))
+        admitUndominated(named, matched, afterIndex => graft.ops.FuzzyJoin.fuzzyJoin(
+              afterIndex.select(col("id").as("__ida"), col("name").as("__na")),
+              afterIndex.select(col("id").as("__idb"), col("name").as("__nb")),
+              "__ida", "__na", "__idb", "__nb", maxDist = depth)
+            .filter(col("__ida") < col("__idb"))
+            .select(col("__idb").as("id")), outPath)(
+          graft.ops.FuzzyJoin.appendToFuzzyIndex(spark, indexPath, _, "id", "name"))
       }
-      .start()
+    }
 
   /** Continuous distribution-drift telemetry over a persisted histogram
     * index ([[graft.ops.Sketch.writeHistIndex]]): each micro-batch is
@@ -436,62 +433,47 @@ object EventStreams {
     * from the batch but present in the reference (and vice versa) score
     * 1.0 — vanishing is drift too.
     *
-    * Write ordering and replay semantics (the e15/r5 reasoning class):
-    * telemetry lands BEFORE the index absorbs the batch. The absorb
-    * step is EXACTLY-once ([[graft.ops.Sketch.publishSegmentOnce]] with
-    * tag `runId-batchId` — histogram counts are not idempotent under
-    * re-append, and a replay that had first folded the batch into its
-    * own reference would bias tv toward 0, the one failure a drift
-    * alarm must not have). A crash between the two writes replays as a
+    * Ordering and replay: [[admit]], with the telemetry as the feed.
+    * The absorb is EXACTLY-once ([[graft.ops.Sketch.publishSegmentOnce]]
+    * with tag `runId-batchId`): histogram counts are not idempotent
+    * under re-append, and a replay that had first folded the batch into
+    * its own reference would bias tv toward 0, the one failure a drift
+    * alarm must not have. A crash between the two writes replays as a
     * duplicate telemetry row with IDENTICAL content (same batch scored
     * against the same pre-absorb reference) — downstream dedups by
-    * (run_id, batch_id, key); a crash after both writes replays as a
-    * pure no-op (the segment guard skips the whole body). Empty
-    * micro-batches are skipped: "no data arrived" is not "a corpus
-    * where every key vanished".
+    * (run_id, batch_id, key). A replayed batch whose segment is already
+    * in the index skips the WHOLE body: re-scoring against a reference
+    * that holds the batch's own counts would emit a conflicting
+    * biased-low telemetry row, so a crash after both writes replays as a
+    * pure no-op. Empty micro-batches are skipped: "no data arrived" is
+    * not "a corpus where every key vanished".
     *
     * `runId` must be unique per stream RUN (it prefixes segment tags):
     * restarting from the same checkpoint reuses batch ids, which the
     * exactly-once guard requires; a NEW run over a new checkpoint
-    * restarts batch ids at 0 and needs a fresh runId to not collide.
-    * A replayed batch whose segment is already in the index skips the
-    * WHOLE body (guard below): the reference now contains the batch's
-    * own counts, and re-scoring against it would emit a conflicting
-    * biased-low telemetry row — so a crash after both writes replays
-    * as a pure no-op, not even a duplicate. */
+    * restarts batch ids at 0 and needs a fresh runId to not collide. */
   def streamingDriftScreen(stream: DataFrame, keyCol: String, valueCol: String,
       indexPath: String, telemetryPath: String, checkpoint: String,
-      runId: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // a replayed batch whose segment WAS already absorbed must skip
-        // entirely: the index now contains the batch's own counts, so
-        // re-scoring would write a conflicting biased-low telemetry row
-        // — the suppressed-alarm failure this screen must never have
-        val alreadyAbsorbed = graft.ops.Sketch.segmentPublished(
-          spark, indexPath, s"$runId-$batchId")
-        if (!alreadyAbsorbed && !batch.isEmpty) {
-          val subBits = graft.ops.Sketch.readHistMeta(spark, indexPath) // heals
-          val batchSketch = graft.ops.Sketch.histSketch(
-            batch.select(col(keyCol), col(valueCol)), keyCol, valueCol, subBits)
-            .persist()
-          try {
-            // the telemetry write runs — and fully materializes its
-            // lazy read of the index — BEFORE the absorb below, so tv
-            // always scores against the pre-absorb reference
-            val tv = graft.ops.Sketch.histDistance(
-                batchSketch, spark.read.parquet(indexPath))
-              .select(lit(runId).as("run_id"), lit(batchId).as("batch_id"),
-                col("key"), col("tv"))
-            tv.write.mode("append").parquet(telemetryPath)
-            val _ = graft.ops.Sketch.publishSegmentOnce(
-              batchSketch, indexPath, s"$runId-$batchId")
-          } finally batchSketch.unpersist()
+      runId: String): StreamingQuery =
+    screen(stream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val tag = s"$runId-$batchId"
+      if (!graft.ops.Sketch.segmentPublished(spark, indexPath, tag) &&
+          !batch.isEmpty) {
+        val subBits = graft.ops.Sketch.readHistMeta(spark, indexPath) // heals
+        // the telemetry write runs — and fully materializes its lazy
+        // read of the index — BEFORE the absorb, so tv always scores
+        // against the pre-absorb reference
+        admit(graft.ops.Sketch.histSketch(
+            batch.select(col(keyCol), col(valueCol)), keyCol, valueCol, subBits),
+          telemetryPath,
+          sketch => graft.ops.Sketch.histDistance(sketch, spark.read.parquet(indexPath))
+            .select(lit(runId).as("run_id"), lit(batchId).as("batch_id"),
+              col("key"), col("tv"))) { sketch =>
+          val _ = graft.ops.Sketch.publishSegmentOnce(sketch, indexPath, tag)
         }
       }
-      .start()
+    }
 
   /** Continuous CROSS-CORPUS quality screen over a persisted LM index
     * ([[graft.ops.Lm.writeLmIndex]]): each micro-batch's docs are
@@ -516,17 +498,13 @@ object EventStreams {
     * judge). */
   def streamingLmScreen(stream: DataFrame, idCol: String, textCol: String,
       lmPath: String, outPath: String, minScore: Double,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        graft.ops.Lm.scoreWithLm(spark, lmPath,
-            batch.filter(col(textCol).isNotNull), idCol, textCol)
-          .filter(col("lm_score") >= minScore)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+      checkpoint: String): StreamingQuery =
+    screen(stream, checkpoint) { (batch, _) =>
+      graft.ops.Lm.scoreWithLm(batch.sparkSession, lmPath,
+          batch.filter(col(textCol).isNotNull), idCol, textCol)
+        .filter(col("lm_score") >= minScore)
+        .write.mode("append").parquet(outPath)
+    }
 
   /** Streaming DSIR importance screen: each micro-batch is scored
     * against a persisted importance model
@@ -544,19 +522,15 @@ object EventStreams {
   def streamingImportanceScreen(stream: DataFrame, idCol: String,
       textCol: String, modelPath: String, outPath: String, scale: Long,
       minNum: Long, minDen: Long,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String): StreamingQuery = {
     require(minDen >= 1L, s"streamingImportanceScreen: minDen=$minDen must be >= 1")
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        graft.ops.Importance.scoreWithModel(spark, modelPath,
-            batch.filter(col(textCol).isNotNull), idCol, textCol, scale)
-          .filter(col("score") * lit(minDen) >
-            col("n_grams") * lit(scale) * lit(minNum))
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+    screen(stream, checkpoint) { (batch, _) =>
+      graft.ops.Importance.scoreWithModel(batch.sparkSession, modelPath,
+          batch.filter(col(textCol).isNotNull), idCol, textCol, scale)
+        .filter(col("score") * lit(minDen) >
+          col("n_grams") * lit(scale) * lit(minNum))
+        .write.mode("append").parquet(outPath)
+    }
   }
 
   /** Stream-static enrichment join: every micro-batch joins against the
@@ -597,20 +571,17 @@ object EventStreams {
     * SemDeDup-style ingest loop: each micro-batch's vectors are
     * screened against the index (any candidate neighbor with cosine ≥
     * `threshold` → a semantic near-dup of already-ingested data →
-    * rejected), then screened IN-batch by same-bucket dominance (a row
-    * drops iff a SMALLER-id batch-mate in its sign bucket has cosine ≥
-    * threshold — deterministic, engine-replayable; dominance, not
-    * closure — the e21 conservative bias). Survivors append `(id, v)`
-    * to the admitted feed and THEN their vectors to the index
-    * (out-before-index, the e18 ordering: a crash between the two
-    * replays as at-least-once duplicate feed rows — downstream dedups
-    * by id — never as loss; vector re-append is inert because the
-    * probe collapses duplicate index rows). A crash AFTER the index
-    * append replays the batch against its own appended rows, which the
-    * probe now MATCHES (equal-id index rows are not excluded on the
-    * screen path — see [[graft.ops.Similarity.jlMatchedIds]]), so the
-    * replay is rejected as duplicate instead of re-admitted; batch and
-    * index ids share one id space by contract.
+    * rejected), then screened IN-batch by same-bucket dominance
+    * ([[admitUndominated]]: a row drops iff a SMALLER-id batch-mate in
+    * its sign bucket has cosine ≥ threshold). Survivors append `(id, v)`
+    * to the admitted feed and THEN their full projected rows to the
+    * index. Ordering and replay: [[admit]]; vector re-append is inert
+    * because the probe collapses duplicate index rows, and a replay
+    * after the absorb is rejected, not re-admitted: the probe MATCHES
+    * the batch's own appended rows (equal-id index rows are not
+    * excluded on the screen path — see
+    * [[graft.ops.Similarity.jlMatchedIds]]); batch and index ids share
+    * one id space by contract.
     *
     * MATCH SCOPE IS STATED, NOT SILENT (the r9 screen-recall rule,
     * honestly inverted): the index probe sees the multi-probed-bucket
@@ -624,48 +595,30 @@ object EventStreams {
   def streamingEmbeddingScreen(stream: DataFrame, idCol: String,
       vecCol: String, indexPath: String, outPath: String,
       checkpoint: String, threshold: Double,
-      candidates: Int = 16): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val m = graft.ops.Similarity.readJlMetaCached(spark, indexPath)
-        // project ONCE per batch (id, v, p, jb, nv) and share it across
-        // the index probe, the dominance pass and the index append —
-        // the first cut re-ran the projection kernel per consumer.
-        // dropDuplicates on id, never a raise: an at-least-once source
-        // legitimately replays rows within a batch, and a checkpointed
-        // foreachBatch would replay a raising batch FOREVER (the screen
-        // decision is identical per id, so dedup loses nothing — the
-        // top-k mixed-rank rationale behind jlTopKIndexed's typed raise
-        // does not apply to a screen)
-        val rows = graft.ops.Similarity.jlProjected(
-            batch.filter(col(idCol).isNotNull && col(vecCol).isNotNull),
-            idCol, vecCol, m)
-          .dropDuplicates("id")
-          .persist()
-        try {
-          val matched = graft.ops.Similarity.jlMatchedIdsProjected(
-            spark, indexPath, rows, threshold, candidates)
-          // persist, not localCheckpoint: afterIndex feeds both the
-          // dominance pass and the admit anti-join and must stay
-          // RECOMPUTABLE (the r4 executor-loss trap)
-          val afterIndex = rows
-            .join(matched.select(col("batch_id").as("id")), Seq("id"), "left_anti")
-            .persist()
-          try {
-            val dominated = graft.ops.Similarity.jlBatchDominatedIds(
-              afterIndex, threshold)
-            val admitted = afterIndex
-              .join(dominated.select(col("batch_id").as("id")), Seq("id"), "left_anti")
-              .persist()
-            try {
-              admitted.select(col("id"), col("v"))
-                .write.mode("append").parquet(outPath)
-              graft.ops.Similarity.appendToJlIndexProjected(admitted, indexPath)
-            } finally admitted.unpersist()
-          } finally afterIndex.unpersist()
-        } finally rows.unpersist()
+      candidates: Int = 16): StreamingQuery =
+    screen(stream, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val m = graft.ops.Similarity.readJlMetaCached(spark, indexPath)
+      // project ONCE per batch (id, v, p, jb, nv) and share it across
+      // the index probe, the dominance pass and the index append —
+      // the first cut re-ran the projection kernel per consumer.
+      // dropDuplicates on id, never a raise: an at-least-once source
+      // legitimately replays rows within a batch, and a checkpointed
+      // foreachBatch would replay a raising batch FOREVER (the screen
+      // decision is identical per id, so dedup loses nothing — the
+      // top-k mixed-rank rationale behind jlTopKIndexed's typed raise
+      // does not apply to a screen)
+      persisted(graft.ops.Similarity.jlProjected(
+          batch.filter(col(idCol).isNotNull && col(vecCol).isNotNull),
+          idCol, vecCol, m)
+        .dropDuplicates("id")) { rows =>
+        val matched = graft.ops.Similarity.jlMatchedIdsProjected(
+          spark, indexPath, rows, threshold, candidates)
+        admitUndominated(rows, matched.select(col("batch_id").as("id")),
+            afterIndex => graft.ops.Similarity.jlBatchDominatedIds(afterIndex, threshold)
+              .select(col("batch_id").as("id")),
+            outPath, _.select(col("id"), col("v")))(
+          graft.ops.Similarity.appendToJlIndexProjected(_, indexPath))
       }
-      .start()
+    }
 }
