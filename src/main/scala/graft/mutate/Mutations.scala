@@ -1,7 +1,10 @@
 package graft.mutate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 import graft.InvalidSqlError
 
@@ -22,15 +25,18 @@ import graft.InvalidSqlError
   * handed to Catalyst's own expression parser via `expr(...)`, so the full
   * Spark SQL expression language is available inside them.
   *
-  * Scale: each mutation is a narrow transformation layered on the scan —
-  * no data is materialized on the driver. Long mutation chains re-execute
-  * lazily; callers can `.cache()` a hot table between batches.
+  * Each rewrite is one narrow transformation of the table's current
+  * version; the session materialises its result as the next version
+  * (`GraftSession.materialise`), so every later read and the next
+  * statement start from stored rows, however long the mutation chain.
   */
 object Mutations {
 
   sealed trait Mutation {
     def table: String
-    def apply(spark: SparkSession, current: DataFrame): DataFrame
+    /** The rewritten table, lazily over `current`. `materialise` freezes
+      * any rows the rewrite must see identically more than once. */
+    def apply(current: DataFrame, materialise: DataFrame => DataFrame): DataFrame
   }
 
   final case class Insert(table: String, columns: Option[Seq[String]],
@@ -43,21 +49,22 @@ object Mutations {
     // assign-at-insert-time rowid semantics want
     @transient private var cached: Option[(DataFrame, DataFrame)] = None
 
-    def apply(spark: SparkSession, current: DataFrame): DataFrame =
-      current.unionByName(plannedRows(spark, current))
+    def apply(current: DataFrame, materialise: DataFrame => DataFrame): DataFrame =
+      current.unionByName(plannedRows(current))
 
-    /** The aligned to-be-inserted rows (pre-union) — a cheap literal
+    /** The aligned to-be-inserted rows (pre-union) — a driver-resident
       * local relation; the trigger layer binds NEW to it. */
-    private[graft] def plannedRows(spark: SparkSession, current: DataFrame): DataFrame =
+    private[graft] def plannedRows(current: DataFrame): DataFrame =
       cached match {
         case Some((base, rows)) if base eq current => rows
         case _ =>
-          val rows = buildRows(spark, current)
+          val rows = buildRows(current)
           cached = Some((current, rows))
           rows
       }
 
-    private def buildRows(spark: SparkSession, current: DataFrame): DataFrame = {
+    private def buildRows(current: DataFrame): DataFrame = {
+      val spark = current.sparkSession
       val targetCols = current.columns.toSeq
       val givenCols = resolveColumns(columns.getOrElse(targetCols), targetCols,
         s"INSERT INTO $table")
@@ -84,9 +91,11 @@ object Mutations {
           r.getLong(0)
         } else 0L
       // ONE local relation for the whole VALUES list: an array of struct
-      // literals exploded in a single projection. A per-tuple
-      // range(1)+union chain builds an N-node plan with quadratic
-      // analyzer cost — a 1,000-tuple INSERT would hang in analysis.
+      // literals, evaluated once by the optimiser over a one-row local
+      // relation (no Spark job), so each value — rand() included — is
+      // fixed at insert time. A per-tuple union chain builds an N-node
+      // plan with quadratic analyzer cost — a 1,000-tuple INSERT would
+      // hang in analysis.
       val structs = tuples.zipWithIndex.map { case (tup, i) =>
         if (tup.length != givenCols.length)
           throw InvalidSqlError(s"INSERT INTO $table", "VALUES arity mismatch")
@@ -105,9 +114,11 @@ object Mutations {
           }
         }: _*)
       }
-      spark.range(1)
-        .select(explode(array(structs: _*)).as("__r"))
-        .select(targetCols.map(c => col(s"__r.`$c`").as(c)): _*)
+      val values = spark.createDataFrame(java.util.List.of(Row()), new StructType())
+        .select(array(structs: _*))
+      val rowType = values.schema.head.dataType.asInstanceOf[ArrayType].elementType
+        .asInstanceOf[StructType]
+      spark.createDataFrame(values.head().getSeq[Row](0).asJava, rowType)
     }
   }
 
@@ -131,22 +142,23 @@ object Mutations {
     * the builder's documented rowid semantics). */
   final case class InsertSelect(table: String, columns: Option[Seq[String]],
       select: String) extends Mutation {
-    /** Plan snapshot of the aligned inserted rows (pre-union): lets the
-      * session count inserted rows with one scan of just the insert
-      * source instead of re-executing the whole lineage twice, and the
-      * trigger layer binds NEW to it. Memoized: a BEFORE trigger sees
-      * the SAME materialized rows the statement then inserts (the
-      * SELECT evaluates once, against the pre-trigger catalog — SQLite
-      * calls same-table interference from BEFORE bodies undefined). */
-    @transient private[graft] var insertedSnapshot: Option[DataFrame] = None
+    /** The aligned inserted rows (pre-union), materialised: the session
+      * counts them for changes(), and the trigger layer binds NEW to
+      * them. Memoized: a BEFORE trigger sees the SAME rows the statement
+      * then inserts (the SELECT evaluates once, against the pre-trigger
+      * catalog — SQLite calls same-table interference from BEFORE bodies
+      * undefined). */
+    @transient private var inserted: Option[DataFrame] = None
 
-    private[graft] def plannedRows(spark: SparkSession, current: DataFrame): DataFrame =
-      insertedSnapshot.getOrElse(buildRows(spark, current))
+    private[graft] def plannedRows(current: DataFrame,
+        materialise: DataFrame => DataFrame): DataFrame =
+      inserted.getOrElse(buildRows(current, materialise))
 
-    def apply(spark: SparkSession, current: DataFrame): DataFrame =
-      current.unionByName(plannedRows(spark, current))
+    def apply(current: DataFrame, materialise: DataFrame => DataFrame): DataFrame =
+      current.unionByName(plannedRows(current, materialise))
 
-    private def buildRows(spark: SparkSession, current: DataFrame): DataFrame = {
+    private def buildRows(current: DataFrame, materialise: DataFrame => DataFrame): DataFrame = {
+      val spark = current.sparkSession
       val targetCols = current.columns.toSeq
       val hasAutoRowid = targetCols.contains("rowid") &&
         current.schema("rowid").dataType == org.apache.spark.sql.types.LongType
@@ -182,13 +194,13 @@ object Mutations {
         else if (givenCols.contains(c)) col(s"`$c`").cast(dt).as(c)
         else lit(null).cast(dt).as(c)
       }
-      // materialize: monotonically_increasing_id over a shuffled source
-      // is NOT stable across re-executions of a lazy plan — a later
-      // rowid-keyed DELETE could hit a different row than the one the
-      // user observed. The checkpoint freezes the assigned rowids (and
-      // matches SQLite's eager insert semantics).
-      val rows = renamed.select(aligned: _*).localCheckpoint()
-      insertedSnapshot = Some(rows)
+      // materialise: monotonically_increasing_id over a shuffled source
+      // is NOT stable across re-executions of a lazy plan — the trigger
+      // bindings and the stored version could see different rowids.
+      // Freezing the rows fixes the assigned rowids (and matches
+      // SQLite's eager insert semantics).
+      val rows = materialise(renamed.select(aligned: _*))
+      inserted = Some(rows)
       rows
     }
   }
@@ -212,7 +224,7 @@ object Mutations {
       }
     }
 
-    def apply(spark: SparkSession, current: DataFrame): DataFrame = {
+    def apply(current: DataFrame, materialise: DataFrame => DataFrame): DataFrame = {
       val cond = where.map(expr).getOrElse(lit(true))
       // all columns are rewritten in ONE projection, never sequentially
       val projected = current.columns.toSeq.zip(newImageCols(current)).map {
@@ -225,15 +237,16 @@ object Mutations {
   }
 
   final case class Delete(table: String, where: Option[String]) extends Mutation {
-    def apply(spark: SparkSession, current: DataFrame): DataFrame =
-      where match {
-        // SQL deletes rows where the predicate is TRUE; rows where it is
-        // NULL survive — so keep NOT(coalesce(p, false)), not NOT(p)
-        // (the latter drops NULL-predicate rows).
-        case Some(w) => current.filter(!coalesce(expr(w), lit(false)))
-        case None => current.limit(0)
-      }
+    def apply(current: DataFrame, materialise: DataFrame => DataFrame): DataFrame =
+      if (where.isEmpty) current.limit(0) else current.filter(!matching(where))
   }
+
+  /** The rows an UPDATE or DELETE `where` selects. SQL acts on rows where
+    * the predicate is TRUE; rows where it is NULL are not matched — so
+    * `coalesce(p, false)`, and a DELETE keeps NOT of that, not NOT(p)
+    * (the latter drops NULL-predicate rows). */
+  private[graft] def matching(where: Option[String]): Column =
+    where.fold(lit(true))(w => coalesce(expr(w), lit(false)))
 
   // conflict clauses (OR REPLACE/IGNORE/…) and the bare REPLACE INTO
   // alias are accepted and inert: file-backed tables carry no unique
@@ -258,12 +271,6 @@ object Mutations {
           (ident.startsWith("[") && ident.endsWith("]"))))
       ident.substring(1, ident.length - 1)
     else ident
-
-  /** Normalize a statement identifier the way [[resolveColumns]] does —
-    * for callers outside this object that must compare column-list
-    * entries (e.g. the session's rowid bookkeeping). */
-  private[graft] def identMatches(ident: String, target: String): Boolean =
-    unquote(ident.trim).equalsIgnoreCase(target)
 
   /** Recognize a DML statement; None ⇒ pass through to `spark.sql`. */
   def intercept(statement: String): Option[Mutation] = statement match {

@@ -4,7 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+import org.apache.spark.storage.StorageLevel
 
 import graft._
 import graft.sources._
@@ -105,7 +108,6 @@ final class GraftSession private[session] (
   /** `sqlite_master`-shaped catalog view for parity with catalog queries
     * (`README.md:149`, `filesql.go:225-248`). */
   private def registerSqliteMaster(): Unit = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     def sqliteType(dt: DataType): String = sqliteTypeName(dt)
     val rows = tables.toSeq.map { case (name, df) =>
@@ -121,8 +123,7 @@ final class GraftSession private[session] (
       StructField("type", StringType), StructField("name", StringType),
       StructField("tbl_name", StringType), StructField("rootpage", IntegerType),
       StructField("sql", StringType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-      .createOrReplaceTempView("sqlite_master")
+    spark.createDataFrame(rows.asJava, schema).createOrReplaceTempView("sqlite_master")
   }
 
   def tableNames: Seq[String] = tables.keys.toSeq
@@ -130,13 +131,80 @@ final class GraftSession private[session] (
   def table(name: String): DataFrame =
     tables.getOrElse(name, throw InvalidSqlError(name, "no such table"))
 
+  private def install(name: String, df: DataFrame): Unit = {
+    tables.update(name, df)
+    df.createOrReplaceTempView(name)
+  }
+
+  // ------------------------------------------------------------ versions
+  // A table is its lazily opened scan until a statement first changes it
+  // (DML or ALTER … COLUMN); from then on it is a materialised version,
+  // and each such statement builds the next version from the current one
+  // before anything is re-pointed, so a statement that fails at run time
+  // throws and leaves the table as it was (SQLite aborts it the same way).
+
+  /** Persisted versions this session made, unpersisted by
+    * [[releaseVersions]] once no table and no snapshot holds them. */
+  private val persisted = mutable.ArrayBuffer.empty[DataFrame]
+
+  /** Stores `df` as a table version, so later statements read its rows
+    * instead of replaying its plan over the source file.
+    *
+    * A version whose estimated size (`optimizedPlan.stats.sizeInBytes`)
+    * is at most `spark.sql.autoBroadcastJoinThreshold` is collected into
+    * a driver-resident `LocalRelation`: that is the estimate and the
+    * bound Spark itself uses to decide a relation is small enough to
+    * ship to every task from the driver, so the driver already holds
+    * relations that size. The optimiser then answers filters and
+    * projections of it — point SELECTs, UPDATE, DELETE — on the driver
+    * with no Spark job. A larger version stays distributed: persisted
+    * `MEMORY_AND_DISK` and counted, so its plan is read from the cache,
+    * not re-run. A failure while computing the rows throws from here. */
+  private def materialise(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.optimizedPlan
+    if (plan.stats.sizeInBytes <= spark.sessionState.conf.autoBroadcastJoinThreshold) {
+      val rows = plan match {
+        // an INSERT on a driver-resident version unions two local
+        // relations, which Catalyst does not fold into one (it does fold
+        // filters and projections of one): concatenate them here rather
+        // than collect the union through a Spark job
+        case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+          val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+          u.children.flatMap(_.asInstanceOf[LocalRelation].data).map(toRow(_).asInstanceOf[Row])
+        case _ => df.collect().toSeq
+      }
+      spark.createDataFrame(rows.asJava, df.schema)
+    } else {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      try df.count()
+      catch { case scala.util.control.NonFatal(e) => df.unpersist(); throw e }
+      persisted += df
+      df
+    }
+  }
+
+  private def releaseVersions(): Unit = if (persisted.nonEmpty) {
+    val live = (tables.values ++ (txnSnapshot ++ savepoints.map(_._2)).flatMap(_.tabs.map(_._2))).toSeq
+    persisted.filterInPlace(v => live.exists(_ eq v) || { v.unpersist(); false })
+  }
+
+  /** Rows in `df`: a filter or projection of a driver-resident version
+    * is folded by the optimiser into a local relation and counted
+    * there; anything else is counted by a Spark job. */
+  private def rowCount(df: DataFrame): Long = df.queryExecution.optimizedPlan match {
+    case local: LocalRelation => local.data.length
+    case _ => df.count()
+  }
+
   // -------------------------------------------------------- transactions
-  // BEGIN snapshots the (cheap, lazy) name → DataFrame map (+ view
-  // registry); ROLLBACK restores it and re-registers views; COMMIT drops
-  // the snapshot and fires auto-save-on-commit ONCE for the whole batch
-  // (reference save.go:339-356 hooks the sql.Tx commit the same way).
-  // DataFrames are immutable plans, so a snapshot is O(#tables)
-  // references — no data copy at any scale. SAVEPOINTs stack more
+  // BEGIN snapshots the name → DataFrame map (+ view registry); ROLLBACK
+  // restores it and re-registers views; COMMIT drops the snapshot and
+  // fires auto-save-on-commit ONCE for the whole batch (reference
+  // save.go:339-356 hooks the sql.Tx commit the same way). Each table is
+  // an opened scan or an immutable materialised version, so a snapshot
+  // is O(#tables) references — no data copy at any scale — and a
+  // persisted version lives while the table or a snapshot holds it
+  // (released after each top-level statement). SAVEPOINTs stack more
   // snapshots on the same mechanism: ROLLBACK TO restores one mid-stack
   // (keeping it, like SQLite), RELEASE pops without restoring, and a
   // savepoint opened OUTSIDE a transaction starts an implicit one whose
@@ -324,77 +392,49 @@ final class GraftSession private[session] (
     spark.emptyDataFrame
   }
 
-  // SQLite session-state functions: values are captured as LAZY thunks at
-  // mutation time (the pre-mutation DataFrame is an immutable plan, so
-  // counting is deferred until someone actually asks — mutations stay
-  // action-free and chainable at scale).
-  private var changesThunk: () => Long = () => 0L
-  private var lastRowidThunk: () => Long = () => 0L
+  // SQLite session-state functions: plain values, set by the last
+  // top-level DML statement once it has succeeded
+  private var changes = 0L
+  private var lastRowid = 0L
 
-  private def recordMutationState(m: Mutations.Mutation,
-      prev: DataFrame, next: DataFrame): Unit = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, max}
+  /** The next version of `prev`'s table after `m`, and what `changes()`
+    * and `last_insert_rowid()` will report for it (None: the statement
+    * leaves last_insert_rowid as it was, as UPDATE and DELETE do in
+    * SQLite). Nothing is recorded here. */
+  private def nextVersion(m: Mutations.Mutation,
+      prev: DataFrame): (DataFrame, Long, Option[Long]) = {
+    import org.apache.spark.sql.functions.{col, max}
+    val next = materialise(m(prev, materialise))
+    val rowidAt = Some(next.columns.indexOf("rowid"))
+      .filter(i => i >= 0 && next.schema(i).dataType == org.apache.spark.sql.types.LongType)
+    def rowid(r: Row, i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
     m match {
       case ins: Mutations.Insert =>
-        changesThunk = () => ins.tuples.length.toLong
-        val hasLongRowid = next.columns.contains("rowid") &&
-          next.schema("rowid").dataType == org.apache.spark.sql.types.LongType
-        val givenCols = ins.columns.getOrElse(next.columns.toSeq)
-        // column lists may be quoted / differently cased — match the way
-        // the mutation layer resolves them
-        val explicitIdx = givenCols.indexWhere(Mutations.identMatches(_, "rowid"))
-        // a literal NULL rowid means "assign one" (SQLite), so the
-        // max-based path applies, not the explicit-value path
-        val lastIsExplicit = explicitIdx >= 0 &&
-          !ins.tuples.last(explicitIdx).trim.equalsIgnoreCase("null")
-        lastRowidThunk =
-          if (!hasLongRowid) () => 0L
-          else if (lastIsExplicit)
-            // SQLite: an explicitly-inserted rowid wins even if it is
-            // below the table's current maximum
-            () => {
-              val r = spark.range(1)
-                .select(expr(ins.tuples.last(explicitIdx)).cast("long")).head()
-              if (r.isNullAt(0)) 0L else r.getLong(0)
-            }
-          else
-            () => {
-              val r = next.agg(max(org.apache.spark.sql.functions.col("rowid"))).head()
-              if (r.isNullAt(0)) 0L else r.getLong(0)
-            }
+        // SQLite reports the rowid of the last row inserted, whether the
+        // statement gave it or it was assigned
+        (next, ins.tuples.length.toLong,
+          Some(rowidAt.fold(0L)(i => rowid(ins.plannedRows(prev).collect().last, i))))
       case ins: Mutations.InsertSelect =>
-        // count just the captured insert-source plan — the pre/post
-        // count difference would execute the whole lineage twice
-        changesThunk = () =>
-          ins.insertedSnapshot.map(_.count()).getOrElse(next.count() - prev.count())
-        lastRowidThunk =
-          if (next.columns.contains("rowid") &&
-              next.schema("rowid").dataType == org.apache.spark.sql.types.LongType)
-            () => {
-              // max over just the INSERTED rows (not the whole table):
-              // explicit rowids below the table max then report correctly
-              val scope = ins.insertedSnapshot.getOrElse(next)
-              val r = scope.agg(max(org.apache.spark.sql.functions.col("rowid"))).head()
-              if (r.isNullAt(0)) 0L else r.getLong(0)
-            }
-          else () => 0L
+        // max over just the INSERTED rows (not the whole table): explicit
+        // rowids below the table max then report correctly
+        val rows = ins.plannedRows(prev, materialise)
+        (next, rowCount(rows),
+          Some(rowidAt.fold(0L)(_ => rowid(rows.agg(max(col("rowid"))).head(), 0))))
       case Mutations.Update(_, _, where) =>
-        // SQLite counts rows MATCHED by the predicate (changed or not)
-        changesThunk = () =>
-          prev.filter(where.map(w => coalesce(expr(w), lit(false))).getOrElse(lit(true))).count()
+        (next, rowCount(prev.filter(Mutations.matching(where))), None)
       case Mutations.Delete(_, where) =>
-        changesThunk = () =>
-          where.map(w => prev.filter(coalesce(expr(w), lit(false))).count())
-            .getOrElse(prev.count())
+        (next, rowCount(prev.filter(Mutations.matching(where))), None)
     }
   }
 
+  private def record(n: Long, rowid: Option[Long]): Unit = {
+    changes = n
+    rowid.foreach(lastRowid = _)
+  }
+
   private def longRow(name: String, v: Long): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row(v)), 1),
-      StructType(Seq(StructField(name, LongType))))
+    spark.createDataFrame(java.util.List.of(Row(v)), StructType(Seq(StructField(name, LongType))))
   }
 
   private val ChangesRe = """(?is)^\s*SELECT\s+changes\s*\(\s*\)\s*;?\s*$""".r
@@ -461,9 +501,12 @@ final class GraftSession private[session] (
     * are immutable — SURVEY §2.2 mutation layer); PRAGMA and transaction
     * statements are intercepted for SQLite-surface parity
     * (`filesql.go:274-301`, `save.go:339-356`). */
-  def sql(statement: String): DataFrame = statement match {
-    case ChangesRe() => longRow("changes()", changesThunk())
-    case LastRowidRe() => longRow("last_insert_rowid()", lastRowidThunk())
+  def sql(statement: String): DataFrame =
+    try run(statement) finally if (!inTriggerBody) releaseVersions()
+
+  private def run(statement: String): DataFrame = statement match {
+    case ChangesRe() => longRow("changes()", changes)
+    case LastRowidRe() => longRow("last_insert_rowid()", lastRowid)
     case PragmaTableInfoRe(ident) => tableInfo(unquoteIdent(ident))
     case PragmaTableListRe() => tableList()
     case PragmaSetUserVersionRe(v) =>
@@ -543,12 +586,11 @@ final class GraftSession private[session] (
       // clobber the view's temp view while both registries list the name
       if (tables.contains(name) || views.contains(name)) {
         if (ifne != null) spark.emptyDataFrame else throw DuplicateTableError(name)
-      } else applyDdl {
-        // materialized like SQLite's CTAS: the new table must not change
+      } else {
+        // materialised like SQLite's CTAS: the new table must not change
         // if its source tables are later mutated, renamed, or dropped
-        val df = spark.sql(select).localCheckpoint()
-        tables.update(name, df)
-        df.createOrReplaceTempView(name)
+        val df = materialise(spark.sql(select))
+        applyDdl(install(name, df))
       }
     case CreateTableRe(ifne, ident, defs) =>
       val name = unquoteIdent(ident)
@@ -557,10 +599,7 @@ final class GraftSession private[session] (
       } else applyDdl {
         val schema = parseColumnDefs(defs)
         if (schema.isEmpty) throw InvalidSqlError(statement, "no columns")
-        val df = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        tables.update(name, df)
-        df.createOrReplaceTempView(name)
+        install(name, spark.createDataFrame(java.util.List.of[Row](), schema))
       }
     case DropTableRe(ife, ident) =>
       val name = unquoteIdent(ident)
@@ -581,8 +620,7 @@ final class GraftSession private[session] (
       applyDdl {
         tables.remove(from)
         spark.catalog.dropTempView(from)
-        tables.update(to, df)
-        df.createOrReplaceTempView(to)
+        install(to, df)
         // SQLite ≥3.25 re-points triggers at the renamed table. (Only
         // the ON-clause target is re-pointed; table references inside
         // body statements keep their original text — documented
@@ -596,9 +634,9 @@ final class GraftSession private[session] (
       val to = unquoteIdent(bI)
       if (!table(name).columns.contains(from))
         throw InvalidSqlError(statement, s"no such column: $from")
-      val df = table(name).withColumnRenamed(from, to)
+      val df = materialise(table(name).withColumnRenamed(from, to))
       applyDdl {
-        tables.update(name, df); df.createOrReplaceTempView(name)
+        install(name, df)
         // SQLite ≥3.25 re-points trigger definitions at the renamed
         // column (UPDATE OF lists + NEW./OLD. references) — without
         // this an AFTER UPDATE OF <col> trigger silently stops firing
@@ -630,15 +668,15 @@ final class GraftSession private[session] (
         case (Some(d), t) => d.cast(affinityType(t))
         case (None, t) => lit(null).cast(affinityType(t))
       }
-      val df = table(name).withColumn(cname, newCol)
-      applyDdl { tables.update(name, df); df.createOrReplaceTempView(name) }
+      val df = materialise(table(name).withColumn(cname, newCol))
+      applyDdl(install(name, df))
     case AlterDropColRe(tI, cI) =>
       val name = unquoteIdent(tI)
       val cname = unquoteIdent(cI)
       if (!table(name).columns.contains(cname))
         throw InvalidSqlError(statement, s"no such column: $cname")
-      val df = table(name).drop(cname)
-      applyDdl { tables.update(name, df); df.createOrReplaceTempView(name) }
+      val df = materialise(table(name).drop(cname))
+      applyDdl(install(name, df))
     case NoOpDdlRe() => spark.emptyDataFrame
     case PragmaOtherRe() =>
       GraftSession.log.warn(
@@ -656,56 +694,37 @@ final class GraftSession private[session] (
         val current = table(name)
         val trigs = triggersFor(mutation)
         if (trigs.isEmpty) {
-          val next = boundPlanDepth(name, mutation(spark, current))
+          val (next, n, rowid) = nextVersion(mutation, current)
+          install(name, next)
           // a mutation fired FROM a trigger body leaves changes() /
           // last_insert_rowid() reflecting the outer statement (SQLite:
           // trigger-internal changes only show in total_changes())
-          if (!inTriggerBody) recordMutationState(mutation, current, next)
-          tables.update(name, next)
-          next.createOrReplaceTempView(name)
-          if (inTransaction) txnDirty = true
-          else if (!inTriggerBody && autoSave.exists(_.onCommit)) performAutoSave()
-          spark.emptyDataFrame
-        } else {
-          // statement-level atomicity: RAISE(ABORT) — or any body
-          // failure — must undo the mutation AND every trigger effect
-          val preSnapshot = snapshotNow
-          try {
-            // BEFORE bodies see (and may mutate) the pre-statement
-            // tables; the statement is then planned from the
-            // post-BEFORE state, so a BEFORE INSERT body's insert into
-            // the same table survives (SQLite keeps both; for
-            // UPDATE/DELETE rows a BEFORE body touched, SQLite declares
-            // the result undefined — here the statement re-evaluates
-            // its predicate against the post-BEFORE state)
-            fireTriggers(trigs.filter(_.timing == "BEFORE"), mutation, current)
-            val base = table(name)
-            val next = boundPlanDepth(name, mutation(spark, base))
-            recordMutationState(mutation, base, next)
-            // the AFTER-trigger row binding must resolve any subquery in
-            // the statement's predicates against the PRE-mutation
-            // catalog — DataFrame construction analyzes eagerly, so
-            // build it before the table view is re-pointed at post-state
-            val afterTrigs = trigs.filter(_.timing == "AFTER")
-            val affectedAfter =
-              if (afterTrigs.nonEmpty) Some(affectedRows(mutation, base)) else None
-            tables.update(name, next)
-            next.createOrReplaceTempView(name)
-            affectedAfter.foreach(fireWith(afterTrigs, _))
-          } catch {
-            case e: TriggerAbortError =>
-              restoreSnapshot(preSnapshot)
-              // RAISE(ROLLBACK) undoes the whole enclosing transaction
-              if (e.kind == "ROLLBACK" && inTransaction) rollback()
-              throw e
-            case scala.util.control.NonFatal(e) =>
-              restoreSnapshot(preSnapshot)
-              throw e
-          }
-          if (inTransaction) txnDirty = true
-          else if (autoSave.exists(_.onCommit)) performAutoSave()
-          spark.emptyDataFrame
+          if (!inTriggerBody) record(n, rowid)
+        } else atomically {
+          // BEFORE bodies see (and may mutate) the pre-statement
+          // tables; the statement is then planned from the
+          // post-BEFORE state, so a BEFORE INSERT body's insert into
+          // the same table survives (SQLite keeps both; for
+          // UPDATE/DELETE rows a BEFORE body touched, SQLite declares
+          // the result undefined — here the statement re-evaluates
+          // its predicate against the post-BEFORE state)
+          fireTriggers(trigs.filter(_.timing == "BEFORE"), mutation, current)
+          val base = table(name)
+          val (next, n, rowid) = nextVersion(mutation, base)
+          // the AFTER-trigger row binding must resolve any subquery in
+          // the statement's predicates against the PRE-mutation
+          // catalog — DataFrame construction analyzes eagerly, so
+          // build it before the table view is re-pointed at post-state
+          val afterTrigs = trigs.filter(_.timing == "AFTER")
+          val affectedAfter =
+            if (afterTrigs.nonEmpty) Some(affectedRows(mutation, base)) else None
+          install(name, next)
+          affectedAfter.foreach(fireWith(afterTrigs, _))
+          record(n, rowid)
         }
+        if (inTransaction) txnDirty = true
+        else if (!inTriggerBody && autoSave.exists(_.onCommit)) performAutoSave()
+        spark.emptyDataFrame
       case None => spark.sql(statement)
     }
   }
@@ -766,22 +785,11 @@ final class GraftSession private[session] (
     if (triggerDepth >= 32)
       throw InvalidSqlError(statement, "too many levels of trigger recursion")
     val affected = affectedRows(m, spark.table(quoteSparkIdent(name)))
-    val preSnapshot = snapshotNow
-    try {
-      if (!inTriggerBody) {
-        // the affected plan is pinned at analysis time, so the deferred
-        // count is stable across the body's own mutations
-        changesThunk = () => affected.count()
-      }
+    atomically {
+      // counted before the bodies run, which may mutate the base tables
+      val n = rowCount(affected)
       fireWith(trigs, affected)
-    } catch {
-      case e: TriggerAbortError =>
-        restoreSnapshot(preSnapshot)
-        if (e.kind == "ROLLBACK" && inTransaction) rollback()
-        throw e
-      case scala.util.control.NonFatal(e) =>
-        restoreSnapshot(preSnapshot)
-        throw e
+      if (!inTriggerBody) changes = n
     }
     if (inTransaction) txnDirty = true
     else if (!inTriggerBody && autoSave.exists(_.onCommit)) performAutoSave()
@@ -793,29 +801,42 @@ final class GraftSession private[session] (
     * UPDATE. Built from the PRE-mutation plan, so it stays stable while
     * body statements re-register views. */
   private def affectedRows(m: Mutations.Mutation, prev: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, struct}
+    import org.apache.spark.sql.functions.{col, struct}
     def asStruct(df: DataFrame, alias: String) =
       struct(df.columns.toSeq.map(c => col(s"`$c`").as(c)): _*).as(alias)
     m match {
       case ins: Mutations.Insert =>
-        val rows = ins.plannedRows(spark, prev)
+        val rows = ins.plannedRows(prev)
         rows.select(asStruct(rows, "NEW"))
       case ins: Mutations.InsertSelect =>
-        val rows = ins.plannedRows(spark, prev)
+        val rows = ins.plannedRows(prev, materialise)
         rows.select(asStruct(rows, "NEW"))
       case u: Mutations.Update =>
         // same matched-row semantics as changes(): NULL predicates don't match
-        val cond = u.where.map(w => coalesce(expr(w), lit(false))).getOrElse(lit(true))
-        val matched = prev.filter(cond)
+        val matched = prev.filter(Mutations.matching(u.where))
         val newStruct = struct(matched.columns.toSeq.zip(u.newImageCols(matched))
           .map { case (c, e) => e.as(c) }: _*).as("NEW")
         matched.select(asStruct(matched, "OLD"), newStruct)
       case d: Mutations.Delete =>
-        val doomed = d.where match {
-          case Some(w) => prev.filter(coalesce(expr(w), lit(false)))
-          case None => prev
-        }
+        val doomed = prev.filter(Mutations.matching(d.where))
         doomed.select(asStruct(doomed, "OLD"))
+    }
+  }
+
+  /** Runs a trigger-firing statement as one unit: RAISE(ABORT) — or any
+    * body failure — undoes the mutation AND every trigger effect, and
+    * RAISE(ROLLBACK) also undoes the whole enclosing transaction. */
+  private def atomically(body: => Unit): Unit = {
+    val preSnapshot = snapshotNow
+    try body
+    catch {
+      case e: TriggerAbortError =>
+        restoreSnapshot(preSnapshot)
+        if (e.kind == "ROLLBACK" && inTransaction) rollback()
+        throw e
+      case scala.util.control.NonFatal(e) =>
+        restoreSnapshot(preSnapshot)
+        throw e
     }
   }
 
@@ -903,9 +924,9 @@ final class GraftSession private[session] (
           val executed = Triggers.rewriteRaise(substituted)
           val isSelect = executed.matches("(?is)^\\s*(SELECT|WITH)\\b.*")
           if (executed != substituted && !isSelect)
-            // a raise_error inside a lazily-applied mutation would fire
-            // at some LATER materialization — outside this statement's
-            // try/restore atomicity window, with trigger effects kept
+            // a raise_error inside a body mutation would surface as a
+            // Spark runtime error from building the version, not as
+            // this trigger's RAISE with its kind
             throw UnsupportedStatementError(stmt,
               "RAISE inside a non-SELECT trigger-body statement is not supported — " +
                 "move the check into a SELECT RAISE(...) WHERE ... statement")
@@ -925,30 +946,9 @@ final class GraftSession private[session] (
     } finally triggerDepth -= 1
   }
 
-  // each UPDATE/DELETE/INSERT stacks one projection/filter/union on the
-  // table's plan; a long interactive session (the reference's sequential
-  // mutation flows, filesql_integration_test.go:741-1010) would grow
-  // analysis cost without bound. Every N mutations the lineage is cut
-  // with an (eager, executor-local) checkpoint — same rationale as the
-  // InsertSelect rowid checkpoint in Mutations.scala.
-  private val mutationCheckpointEvery = 50
-  private val mutationDepth = mutable.Map.empty[String, Int]
-
-  private def boundPlanDepth(name: String, next: DataFrame): DataFrame = {
-    val d = mutationDepth.getOrElse(name, 0) + 1
-    if (d >= mutationCheckpointEvery) {
-      mutationDepth.update(name, 0)
-      next.localCheckpoint()
-    } else {
-      mutationDepth.update(name, d)
-      next
-    }
-  }
-
   /** `PRAGMA table_info(t)` equivalent (`filesql.go:274-301`):
     * (cid, name, type, notnull, dflt_value, pk) rows in SQLite shape. */
   def tableInfo(name: String): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     def sqliteType(dt: DataType): String = sqliteTypeName(dt)
     val rows = table(name).schema.fields.zipWithIndex.map { case (f, i) =>
@@ -958,13 +958,12 @@ final class GraftSession private[session] (
       StructField("cid", IntegerType), StructField("name", StringType),
       StructField("type", StringType), StructField("notnull", IntegerType),
       StructField("dflt_value", StringType), StructField("pk", IntegerType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+    spark.createDataFrame(rows.toSeq.asJava, schema)
   }
 
   /** `PRAGMA table_list` equivalent: (schema, name, type, ncol, wr,
     * strict) rows in SQLite shape, one per registered table. */
   def tableList(): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val rows = tables.toSeq.map { case (name, df) =>
       Row("main", name, "table", df.schema.fields.length, 0, 0)
@@ -977,7 +976,7 @@ final class GraftSession private[session] (
       StructField("schema", StringType), StructField("name", StringType),
       StructField("type", StringType), StructField("ncol", IntegerType),
       StructField("wr", IntegerType), StructField("strict", IntegerType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Export every table to `dir` (reference S16 `DumpDatabase`,
@@ -989,8 +988,9 @@ final class GraftSession private[session] (
     * empty output dir ⇒ overwrite the directory of the first input. */
   def close(): Unit = {
     if (autoSave.exists(!_.onCommit)) performAutoSave()
-    views.keys.foreach(spark.catalog.dropTempView)
-    tables.keys.foreach(spark.catalog.dropTempView)
+    (views.keys ++ tables.keys ++ Seq("sqlite_master")).foreach(spark.catalog.dropTempView)
+    persisted.foreach(_.unpersist())
+    persisted.clear()
     // graft_* SQL functions go back to their pre-open state (guarded —
     // see SqlKernels.registerScoped); the SQLite dialect registrations
     // stay, matching the cluster-wide GraftSparkExtensions contract

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,6 +22,47 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = dir.resolve(name)
     java.nio.file.Files.writeString(p, content)
     p.toString
+  }
+
+  /** Jobs launched on this thread by `body`, counted by a SparkListener.
+    * A marked sentinel job closes the window: listener events arrive in
+    * order, so once it is seen every earlier job start has been too. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"counted-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger(0)
+    val closed = Promise[Unit]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach { p =>
+          if (p.getProperty("graft.test.sentinel") == "1") closed.trySuccess(())
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted jobs")
+    try {
+      body
+      sc.setLocalProperty("graft.test.sentinel", "1")
+      sc.parallelize(Seq(1), 1).count()
+      Await.result(closed.future, 60.seconds)
+      jobs.get
+    } finally {
+      sc.setLocalProperty("graft.test.sentinel", null)
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Runs `body` with the given session confs set, restoring each after. */
+  def withConf[A](confs: (String, String)*)(body: => A): A = {
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }
 

@@ -7,14 +7,7 @@ import graft.sinks.DumpOptions
 
 /** End-to-end facade specs ≈ reference `filesql_test.go` TestOpen /
   * TestSQLQueries / integration suite shapes. */
-class GraftSessionSpec extends SparkSpec {
-
-  private def fixtures(dir: java.nio.file.Path): Unit = {
-    writeFile(dir, "users.csv",
-      "id,name,role,department_id\n1,Alice,admin,10\n2,Bob,user,20\n3,Carol,user,10\n")
-    writeFile(dir, "departments.csv",
-      "id,dept\n10,Engineering\n20,Sales\n")
-  }
+class GraftSessionSpec extends SparkSpec with SessionFlows {
 
   test("open directory → tables named from files, joinable via SQL") {
     val dir = tmpDir("sess")
@@ -42,18 +35,7 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("INSERT / UPDATE / DELETE mutation flow (integration_test.go:741-1010 shape)") {
-    val dir = tmpDir("dml")
-    fixtures(dir)
-    val s = GraftSession.open(spark, dir.toString)
-    s.sql("INSERT INTO users VALUES (4, 'Dan', 'user', 20)")
-    assert(s.sql("SELECT COUNT(*) FROM users").head().getLong(0) == 4)
-    s.sql("INSERT INTO users (id, name) VALUES (5, 'Eve')")
-    assert(s.sql("SELECT role FROM users WHERE id = 5").head().isNullAt(0))
-    s.sql("UPDATE users SET role = 'admin' WHERE department_id = 20")
-    assert(s.sql("SELECT COUNT(*) FROM users WHERE role = 'admin'").head().getLong(0) == 3)
-    s.sql("DELETE FROM users WHERE id >= 4")
-    assert(s.sql("SELECT COUNT(*) FROM users").head().getLong(0) == 3)
-    s.close()
+    mutationFlow()
   }
 
   test("duplicate table name rejected") {
@@ -136,40 +118,7 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("transactions: ROLLBACK restores pre-BEGIN state; COMMIT auto-saves once") {
-    val dir = tmpDir("txn")
-    fixtures(dir)
-    val out = tmpDir("txnout")
-    val s = GraftSession.builder()
-      .addPath(dir.toString)
-      .enableAutoSaveOnCommit(out.toString)
-      .open(spark)
-    // rollback: mutations inside the txn vanish from the view
-    s.sql("BEGIN")
-    s.sql("DELETE FROM users WHERE id = 1")
-    s.sql("INSERT INTO users VALUES (9, 'Zed', 'user', 10)")
-    assert(s.sql("SELECT COUNT(*) FROM users").head().getLong(0) == 3)
-    s.sql("ROLLBACK")
-    assert(s.sql("SELECT COUNT(*) FROM users").head().getLong(0) == 3)
-    assert(s.sql("SELECT COUNT(*) FROM users WHERE id = 1").head().getLong(0) == 1)
-    assert(!java.nio.file.Files.exists(out.resolve("users.csv")),
-      "rolled-back transaction must not auto-save")
-    // commit: batched mutations apply atomically, auto-save fires at COMMIT
-    s.sql("BEGIN TRANSACTION")
-    s.sql("DELETE FROM users WHERE id = 2")
-    assert(!java.nio.file.Files.exists(out.resolve("users.csv")),
-      "auto-save-on-commit must not fire per-mutation inside a transaction")
-    s.sql("COMMIT;")
-    assert(java.nio.file.Files.exists(out.resolve("users.csv")))
-    val s2 = GraftSession.open(spark, out.resolve("users.csv").toString)
-    assert(s2.sql("SELECT COUNT(*) FROM users").head().getLong(0) == 2)
-    s2.close()
-    // statement-state errors match SQLite's messages
-    intercept[graft.InvalidSqlError](s.sql("COMMIT"))
-    intercept[graft.InvalidSqlError](s.sql("ROLLBACK"))
-    s.sql("BEGIN")
-    intercept[graft.InvalidSqlError](s.sql("BEGIN"))
-    s.sql("ROLLBACK")
-    s.close()
+    transactionFlow()
   }
 
   // CREATE TRIGGER execution semantics (incl. INSTEAD OF view-directed
@@ -282,35 +231,7 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("changes() and last_insert_rowid() report the last DML's effect") {
-    val dir = tmpDir("changes")
-    fixtures(dir)
-    val s = GraftSession.builder().addPath(dir.toString).withRowId().open(spark)
-    assert(s.sql("SELECT changes()").head().getLong(0) == 0)
-    s.sql("INSERT INTO users (id, name) VALUES (7, 'G'), (8, 'H')")
-    assert(s.sql("SELECT changes()").head().getLong(0) == 2)
-    val rid = s.sql("SELECT last_insert_rowid()").head().getLong(0)
-    val maxRid = s.sql("SELECT MAX(rowid) FROM users").head().getLong(0)
-    assert(rid == maxRid && rid > 0)
-    s.sql("UPDATE users SET role = 'x' WHERE id <= 2")
-    assert(s.sql("SELECT changes()").head().getLong(0) == 2)
-    s.sql("DELETE FROM users WHERE id = 999") // matches nothing
-    assert(s.sql("SELECT changes()").head().getLong(0) == 0)
-    s.sql("DELETE FROM users WHERE id = 1")
-    assert(s.sql("SELECT changes()").head().getLong(0) == 1)
-    // explicitly-inserted rowid wins even when below the current max
-    s.sql("INSERT INTO users (id, name, rowid) VALUES (9, 'I', 5)")
-    assert(s.sql("SELECT last_insert_rowid()").head().getLong(0) == 5)
-    // a literal NULL rowid means "assign one" (SQLite), not a NULL cell
-    s.sql("INSERT INTO users (id, name, rowid) VALUES (10, 'J', NULL)")
-    assert(!s.sql("SELECT rowid FROM users WHERE id = 10").head().isNullAt(0))
-    assert(s.sql("SELECT last_insert_rowid()").head().getLong(0) ==
-      s.sql("SELECT rowid FROM users WHERE id = 10").head().getLong(0))
-    // SQLite parity: the first rowid of an empty table is 1
-    s.sql("CREATE TABLE fresh (rowid INTEGER, x TEXT)")
-    s.sql("INSERT INTO fresh (x) VALUES ('a'), ('b')")
-    assert(s.sql("SELECT rowid FROM fresh ORDER BY rowid").collect()
-      .map(_.getLong(0)).toSeq == Seq(1L, 2L))
-    s.close()
+    changesFlow()
   }
 
   test("BLOB column dumps as its bytes, not a JVM array identity") {
@@ -488,45 +409,7 @@ class GraftSessionSpec extends SparkSpec {
   }
 
   test("SAVEPOINT / RELEASE / ROLLBACK TO: nested partial rollback, implicit-txn commit") {
-    val dir = tmpDir("sp")
-    fixtures(dir)
-    val out = tmpDir("spout")
-    val s = GraftSession.builder()
-      .addPath(dir.toString)
-      .enableAutoSaveOnCommit(out.toString)
-      .open(spark)
-    // implicit transaction: SAVEPOINT outside BEGIN opens one; mutations
-    // are NOT auto-saved until the outermost RELEASE commits
-    s.sql("SAVEPOINT outer_sp")
-    s.sql("DELETE FROM users WHERE id = 3")
-    assert(!java.nio.file.Files.exists(out.resolve("users.csv")),
-      "savepoint-opened transaction must defer auto-save to RELEASE")
-    s.sql("SAVEPOINT inner_sp")
-    s.sql("DELETE FROM users WHERE id = 2")
-    assert(s.sql("SELECT COUNT(*) FROM users").head().getLong(0) == 1)
-    // partial rollback: inner mutation undone, outer change kept
-    s.sql("ROLLBACK TO inner_sp")
-    assert(s.sql("SELECT COUNT(*) FROM users").head().getLong(0) == 2)
-    assert(s.sql("SELECT COUNT(*) FROM users WHERE id = 3").head().getLong(0) == 0)
-    // the named savepoint survives ROLLBACK TO (SQLite) — release it twice
-    s.sql("RELEASE SAVEPOINT inner_sp")
-    intercept[graft.InvalidSqlError](s.sql("RELEASE inner_sp"))
-    // releasing the outermost savepoint of the implicit txn commits +
-    // auto-saves ONCE
-    s.sql("RELEASE outer_sp")
-    assert(java.nio.file.Files.exists(out.resolve("users.csv")))
-    val s2 = GraftSession.open(spark, out.resolve("users.csv").toString)
-    assert(s2.sql("SELECT COUNT(*) FROM users").head().getLong(0) == 2)
-    s2.close()
-    // inside an explicit BEGIN, RELEASE does NOT commit
-    s.sql("BEGIN")
-    s.sql("SAVEPOINT a")
-    s.sql("DELETE FROM users WHERE id = 1")
-    s.sql("RELEASE a")
-    s.sql("ROLLBACK") // still in the BEGIN txn: everything reverts
-    assert(s.sql("SELECT COUNT(*) FROM users WHERE id = 1").head().getLong(0) == 1)
-    intercept[graft.InvalidSqlError](s.sql("ROLLBACK TO nowhere"))
-    s.close()
+    savepointFlow()
   }
 
   test("unknown PRAGMAs answer benignly instead of leaking a parse error") {
@@ -663,23 +546,58 @@ class GraftSessionSpec extends SparkSpec {
     s.close()
   }
 
-  test("200 chained mutations stay fast: plan depth is bounded by periodic checkpoints") {
+  test("200 chained mutations stay fast: plan depth is bounded by materialised versions") {
     val dir = tmpDir("chain")
     fixtures(dir)
     val s = GraftSession.open(spark, dir.toString)
+    def planNodes = s.table("users").queryExecution.analyzed.collect { case n => n }.length
     val start = System.nanoTime()
+    var afterFirst = 0
     (1 to 100).foreach { i =>
       s.sql(s"UPDATE users SET name = 'u$i' WHERE id = 1")
+      if (i == 1) afterFirst = planNodes
       s.sql(s"INSERT INTO users VALUES (${100 + i}, 'x$i', 'user', 10)")
     }
     s.sql("DELETE FROM users WHERE id > 150")
     val elapsedSec = (System.nanoTime() - start) / 1e9
-    // results unchanged by the checkpoint cuts
+    // each statement builds the next version from stored rows: the
+    // table's plan after mutation 200 is no deeper than after mutation 1
+    assert(planNodes == afterFirst)
     assert(s.sql("SELECT name FROM users WHERE id = 1").head().getString(0) == "u100")
     assert(s.sql("SELECT COUNT(*) FROM users").head().getLong(0) == 53)
-    // without lineage cuts this chain's analysis cost grows superlinearly;
-    // generous bound so CI noise can't flake it
+    // a lazy lineage would make this chain's analysis cost grow
+    // superlinearly; generous bound so CI noise can't flake it
     assert(elapsedSec < 120, s"mutation chain took ${elapsedSec}s - plan depth unbounded?")
+    s.close()
+  }
+
+  test("a DML statement that fails at run time leaves the table, changes() and the transaction as they were") {
+    val dir = tmpDir("faildml")
+    fixtures(dir)
+    val s = GraftSession.open(spark, dir.toString)
+    def deptSum = s.sql("SELECT sum(department_id) FROM users").head().getLong(0)
+    val failing = "UPDATE users SET department_id = assert_true(id < 0) WHERE id = 3"
+    // first mutation: the table is still its opened scan
+    s.sql("DELETE FROM users WHERE id = 999")
+    intercept[Exception](s.sql(failing))
+    assert(s.sql("SELECT changes()").head().getLong(0) == 0)
+    assert(deptSum == 40)
+    s.sql("INSERT INTO users VALUES (4, 'Dan', 'user', 20)")
+    assert(deptSum == 60)
+    // later mutations: the table is a materialised version
+    intercept[Exception](s.sql(failing))
+    assert(s.sql("SELECT changes()").head().getLong(0) == 1)
+    assert(deptSum == 60)
+    // inside a transaction the failure aborts only its statement
+    s.sql("BEGIN")
+    s.sql("DELETE FROM users WHERE id = 4")
+    intercept[Exception](s.sql(failing))
+    assert(s.sql("SELECT changes()").head().getLong(0) == 1)
+    assert(deptSum == 40)
+    s.sql("UPDATE users SET department_id = 30 WHERE id = 3")
+    assert(deptSum == 60)
+    s.sql("ROLLBACK")
+    assert(deptSum == 60)
     s.close()
   }
 }

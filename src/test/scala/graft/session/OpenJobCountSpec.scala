@@ -1,11 +1,5 @@
 package graft.session
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import scala.concurrent.{Await, Promise}
-import scala.concurrent.duration._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkSpec
@@ -21,36 +15,6 @@ import graft.sources.{CsvSource, LtsvSource, XlsxSource}
   * result stage). An XLSX open launches none. */
 class OpenJobCountSpec extends SparkSpec {
 
-  /** Jobs launched on this thread by `body`, counted by a SparkListener.
-    * A marked sentinel job closes the window: listener events arrive in
-    * order, so once it is seen every earlier job start has been too. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"open-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
-    val closed = Promise[Unit]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach { p =>
-          if (p.getProperty("graft.test.sentinel") == "1") closed.trySuccess(())
-          else jobs.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "open job count")
-    try {
-      body
-      sc.setLocalProperty("graft.test.sentinel", "1")
-      sc.parallelize(Seq(1), 1).count()
-      Await.result(closed.future, 60.seconds)
-      jobs.get
-    } finally {
-      sc.setLocalProperty("graft.test.sentinel", null)
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   private def openJobs(builder: GraftSession.Builder): Int = {
     var s: GraftSession = null
     val n = jobsDuring { s = builder.open(spark) }
@@ -59,16 +23,9 @@ class OpenJobCountSpec extends SparkSpec {
   }
 
   /** Runs `body` with Spark's split bounds at `bytes`, restoring both. */
-  private def withSplitBound[A](bytes: Long)(body: => A): A = {
-    val keys = Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
-    val before = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, bytes))
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  private def withSplitBound[A](bytes: Long)(body: => A): A =
+    withConf(Seq("spark.sql.files.openCostInBytes", "spark.sql.files.maxPartitionBytes")
+      .map(_ -> bytes.toString): _*)(body)
 
   test("a newline-free single-split CSV or TSV open launches no job") {
     val dir = tmpDir("jobs-csv")

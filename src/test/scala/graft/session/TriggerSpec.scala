@@ -5,47 +5,14 @@ import graft.{InvalidSqlError, SparkSpec, TriggerAbortError, UnsupportedStatemen
 /** SQLite CREATE TRIGGER surface (reference README.md:333 — triggers are
   * promised via the embedded SQLite engine). Covers both execution paths:
   * the set-based INSERT-VALUES/RAISE path and the per-row fallback. */
-class TriggerSpec extends SparkSpec {
-
-  private def openSess(prefix: String): GraftSession = {
-    val dir = tmpDir(prefix)
-    writeFile(dir, "users.csv",
-      "id,name,role,department_id\n1,Alice,admin,10\n2,Bob,user,20\n3,Carol,user,10\n")
-    val s = GraftSession.open(spark, dir.toString)
-    s.sql("CREATE TABLE audit (uid INTEGER, action TEXT)")
-    s
-  }
+class TriggerSpec extends SparkSpec with SessionFlows {
 
   test("AFTER INSERT audit trigger fires per inserted row (set-based path)") {
-    val s = openSess("trg-ins")
-    s.sql("""CREATE TRIGGER au AFTER INSERT ON users BEGIN
-            |  INSERT INTO audit VALUES (NEW.id, 'I'); END""".stripMargin)
-    s.sql("INSERT INTO users VALUES (4, 'Dan', 'user', 20), (5, 'Eve', 'user', 10)")
-    s.sql("INSERT INTO users SELECT id + 10, name, role, department_id FROM users WHERE id <= 2")
-    val audit = s.sql("SELECT uid, action FROM audit ORDER BY uid").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(audit == Seq((4L, "I"), (5L, "I"), (11L, "I"), (12L, "I")))
-    // changes() reflects the OUTER statement, not the trigger's inserts
-    s.sql("INSERT INTO users VALUES (6, 'Fay', 'user', 10)")
-    assert(s.sql("SELECT changes()").head().getLong(0) == 1L)
-    s.close()
+    afterInsertTriggerFlow()
   }
 
   test("UPDATE trigger binds OLD and NEW; WHEN filters affected rows") {
-    val s = openSess("trg-upd")
-    s.sql("""CREATE TRIGGER uu AFTER UPDATE ON users
-            |WHEN OLD.role <> NEW.role BEGIN
-            |  INSERT INTO audit (uid, action) VALUES (NEW.id, OLD.role || '>' || NEW.role);
-            |END""".stripMargin)
-    // matches ids 2,3 — but id 1 already admin is untouched by WHERE
-    s.sql("UPDATE users SET role = 'admin' WHERE role = 'user'")
-    val audit = s.sql("SELECT uid, action FROM audit ORDER BY uid").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(audit == Seq((2L, "user>admin"), (3L, "user>admin")))
-    // WHEN false for every matched row → no new audit rows
-    s.sql("UPDATE users SET role = 'admin' WHERE id = 1")
-    assert(s.sql("SELECT COUNT(*) AS n FROM audit").head().getLong(0) == 2L)
-    s.close()
+    updateTriggerFlow()
   }
 
   test("UPDATE OF fires only when a listed column is assigned") {
@@ -71,50 +38,15 @@ class TriggerSpec extends SparkSpec {
   }
 
   test("RAISE(ABORT) validation trigger rolls back the whole statement") {
-    val s = openSess("trg-raise")
-    s.sql("""CREATE TRIGGER guard BEFORE INSERT ON users BEGIN
-            |  INSERT INTO audit VALUES (NEW.id, 'TRY');
-            |  SELECT RAISE(ABORT, 'negative id') WHERE NEW.id < 0;
-            |END""".stripMargin)
-    val e = intercept[TriggerAbortError](
-      s.sql("INSERT INTO users VALUES (7, 'Gil', 'user', 10), (-1, 'Bad', 'user', 10)"))
-    assert(e.getMessage.contains("negative id"))
-    // the statement AND the trigger's own audit insert both rolled back
-    assert(s.sql("SELECT COUNT(*) AS n FROM users").head().getLong(0) == 3L)
-    assert(s.sql("SELECT COUNT(*) AS n FROM audit").head().getLong(0) == 0L)
-    // a clean insert passes and keeps its audit row
-    s.sql("INSERT INTO users VALUES (7, 'Gil', 'user', 10)")
-    assert(s.sql("SELECT COUNT(*) AS n FROM users").head().getLong(0) == 4L)
-    assert(s.sql("SELECT COUNT(*) AS n FROM audit").head().getLong(0) == 1L)
-    s.close()
+    raiseAbortFlow()
   }
 
   test("RAISE(ROLLBACK) undoes the enclosing transaction") {
-    val s = openSess("trg-rb")
-    s.sql("""CREATE TRIGGER guard BEFORE INSERT ON users BEGIN
-            |  SELECT RAISE(ROLLBACK, 'no') WHERE NEW.id > 100; END""".stripMargin)
-    s.sql("BEGIN")
-    s.sql("INSERT INTO users VALUES (8, 'Hal', 'user', 10)")
-    intercept[TriggerAbortError](s.sql("INSERT INTO users VALUES (101, 'Ivy', 'user', 10)"))
-    // whole transaction gone, including the earlier good insert
-    assert(s.sql("SELECT COUNT(*) AS n FROM users").head().getLong(0) == 3L)
-    // and the transaction is closed (SQLite: ROLLBACK ends it)
-    s.sql("BEGIN"); s.sql("ROLLBACK")
-    s.close()
+    raiseRollbackFlow()
   }
 
   test("per-row fallback: counter UPDATE body fires once per affected row") {
-    val s = openSess("trg-row")
-    s.sql("CREATE TABLE counters (k TEXT, n INTEGER)")
-    s.sql("INSERT INTO counters VALUES ('dept10', 0)")
-    // body UPDATE is not vectorizable → per-row driver loop; two affected
-    // rows in department 10 must increment the counter twice
-    s.sql("""CREATE TRIGGER cnt AFTER UPDATE ON users
-            |WHEN NEW.department_id = 10 BEGIN
-            |  UPDATE counters SET n = n + 1 WHERE k = 'dept10'; END""".stripMargin)
-    s.sql("UPDATE users SET role = 'z'")
-    assert(s.sql("SELECT n FROM counters").head().getLong(0) == 2L)
-    s.close()
+    perRowTriggerFlow()
   }
 
   test("per-row fallback substitutes NEW literals incl. strings with quotes") {
@@ -241,16 +173,6 @@ class TriggerSpec extends SparkSpec {
 
   // ------------------------------------------------ INSTEAD OF (views)
 
-  private def openViewSess(prefix: String): GraftSession = {
-    val s = openSess(prefix)
-    s.sql("CREATE TABLE departments (id INTEGER, dept_name TEXT)")
-    s.sql("INSERT INTO departments VALUES (10, 'eng'), (20, 'ops')")
-    s.sql("""CREATE VIEW staff AS
-            |  SELECT u.id, u.name, d.dept_name FROM users u
-            |  JOIN departments d ON d.id = u.department_id""".stripMargin)
-    s
-  }
-
   test("INSTEAD OF INSERT routes view inserts into both base tables") {
     val s = openViewSess("trg-iof-ins")
     s.sql("""CREATE TRIGGER vi INSTEAD OF INSERT ON staff BEGIN
@@ -266,22 +188,7 @@ class TriggerSpec extends SparkSpec {
   }
 
   test("INSTEAD OF UPDATE and DELETE bind OLD/NEW from the view rows") {
-    val s = openViewSess("trg-iof-upd")
-    // UPDATE on the view rewrites the underlying user's name (per-row
-    // fallback body: UPDATE is not a vectorizable statement)
-    s.sql("""CREATE TRIGGER vu INSTEAD OF UPDATE OF name ON staff BEGIN
-            |  UPDATE users SET name = NEW.name WHERE id = OLD.id;
-            |END""".stripMargin)
-    s.sql("""CREATE TRIGGER vd INSTEAD OF DELETE ON staff BEGIN
-            |  DELETE FROM users WHERE id = OLD.id;
-            |END""".stripMargin)
-    s.sql("UPDATE staff SET name = 'Alicia' WHERE id = 1")
-    assert(s.sql("SELECT name FROM users WHERE id = 1").head().getString(0) == "Alicia")
-    s.sql("DELETE FROM staff WHERE dept_name = 'ops'")
-    assert(s.sql("SELECT COUNT(*) AS n FROM users WHERE id = 2").head().getLong(0) == 0L)
-    // the view reflects base-table state
-    assert(s.sql("SELECT COUNT(*) AS n FROM staff").head().getLong(0) == 2L)
-    s.close()
+    insteadOfFlow()
   }
 
   test("view DML without a matching INSTEAD OF trigger is rejected; timing/target rules hold") {
