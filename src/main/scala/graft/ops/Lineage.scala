@@ -58,4 +58,14 @@ object Lineage {
       df.checkpoint()
     } else df.localCheckpoint()
   }
+
+  /** True iff `df`'s estimated size (`optimizedPlan.stats.sizeInBytes`)
+    * is at most `spark.sql.autoBroadcastJoinThreshold`, so its rows may
+    * be collected and worked on the driver: that is the estimate and the
+    * bound Spark itself uses to decide a relation is small enough to
+    * ship to every task from the driver, so the driver already holds
+    * relations that size. A bound of -1 keeps every frame distributed. */
+  def fitsOnDriver(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Mergeable distinct-count sketches: KMV (k-minimum-values).
   *
@@ -477,10 +478,12 @@ object Sketch {
   /** Per-path `_meta` memo for the bloom/hist index families whose
     * readers sit in per-micro-batch screen loops (e15/e17): the sidecar
     * collect is paid once per JVM, not per batch — the JL/Lm/phash memo
-    * precedent. Meta is a CORRECTNESS input (bucket geometry / bit
-    * space), so [[writeIndexDir]] invalidates around its swap via
-    * [[FsOps.swapDirsInvalidating]] (remove → swap → remove, the
-    * round-10 rule); appends/compactions keep parameters verbatim.
+    * precedent. The bloom entry also holds the row schema
+    * ([[readBloomRows]]), and the bloom writer fills it after its swap
+    * ([[writeBloomDir]]). Meta is a CORRECTNESS input (bucket geometry /
+    * bit space, key type), so [[writeIndexDir]] invalidates around its
+    * swap via [[FsOps.swapDirsInvalidating]] (remove → swap → remove,
+    * the round-10 rule); appends/compactions keep parameters verbatim.
     * Keys carry the index family ([[metaKey]]), so one path read through
     * both getters never aliases two sidecar shapes. Only this JVM's
     * rewrites invalidate: an index rebuilt by another process with new
@@ -516,22 +519,46 @@ object Sketch {
     * in a sibling dir and swapped in with ONE rename. */
   def writeBloomIndex(df: DataFrame, keyCol: String, valueCol: String,
       path: String, numBits: Int = 8192, numHashes: Int = 4): Unit = {
-    val spark = df.sparkSession
+    writeBloomDir(bloomSketch(df, keyCol, valueCol, numBits, numHashes),
+      numBits, numHashes, path)
+  }
+
+  /** [[writeIndexDir]] for a Bloom index, then memoizes what it wrote:
+    * the parameters and the row schema are known here, so the first
+    * read after the swap loads neither the sidecar nor a footer. */
+  private def writeBloomDir(rows: DataFrame, numBits: Int, numHashes: Int,
+      path: String): Unit = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    writeIndexDir(spark, bloomSketch(df, keyCol, valueCol, numBits, numHashes),
-      Seq((numBits, numHashes)).toDF("num_bits", "num_hashes"), path)
+    writeIndexDir(spark, rows, Seq((numBits, numHashes)).toDF("num_bits", "num_hashes"), path)
+    indexMetaCache.put(metaKey("bloom", path), Seq(numBits, numHashes, rows.schema))
   }
 
   /** Index parameters from the `_meta` sidecar (heals first; value
     * memoized per path — see [[indexMetaCache]]). */
   def readBloomMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Int) = {
-    healIndex(spark, path) // heal EVERY entry, memoize only the value
-    val v = indexMetaCache.computeIfAbsent(metaKey("bloom", path), _ => {
-      val r = spark.read.parquet(path + "/_meta").collect().head
-      Seq(r.getInt(0), r.getInt(1))
-    })
+    val v = bloomMeta(spark, path)
     (v(0).asInstanceOf[Int], v(1).asInstanceOf[Int])
+  }
+
+  /** The index's bitmap rows `(key, word_idx, bits)`, every segment,
+    * read with the row schema memoized beside the parameters (heals
+    * first): without a schema each read would launch a job to infer it
+    * from a parquet footer. */
+  def readBloomRows(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame =
+    spark.read.schema(bloomMeta(spark, path)(2).asInstanceOf[StructType]).parquet(path)
+
+  /** `(numBits, numHashes, row schema)`. Appends keep the row schema,
+    * so it changes only with a rewrite, which invalidates the entry. */
+  private def bloomMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[Any] = {
+    healIndex(spark, path) // heal EVERY entry, memoize only the value
+    indexMetaCache.computeIfAbsent(metaKey("bloom", path), _ => {
+      val r = spark.read.parquet(path + "/_meta").collect().head
+      Seq(r.getInt(0), r.getInt(1), spark.read.parquet(path).schema)
+    })
   }
 
   /** Append a batch to a [[writeBloomIndex]] index with the index's OWN
@@ -553,8 +580,8 @@ object Sketch {
   def probeBloomIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       probes: DataFrame, keyCol: String, valueCol: String): DataFrame = {
     val (numBits, numHashes) = readBloomMeta(spark, path)
-    val collapsed = bloomMerge(spark.read.parquet(path))
-    bloomMayContain(collapsed, probes, keyCol, valueCol, numBits, numHashes)
+    bloomMayContain(bloomMerge(readBloomRows(spark, path)), probes, keyCol, valueCol,
+      numBits, numHashes)
   }
 
   /** Rewrite a multi-segment index as one row per (key, word_idx) —
@@ -563,9 +590,7 @@ object Sketch {
   def compactBloomIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     val (numBits, numHashes) = readBloomMeta(spark, path)
-    import spark.implicits._
-    writeIndexDir(spark, bloomMerge(spark.read.parquet(path)),
-      Seq((numBits, numHashes)).toDF("num_bits", "num_hashes"), path)
+    writeBloomDir(bloomMerge(readBloomRows(spark, path)), numBits, numHashes, path)
   }
 
   // Persisted KMV / CM / histogram indexes — the same continuous-ingest

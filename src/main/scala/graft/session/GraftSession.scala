@@ -150,20 +150,16 @@ final class GraftSession private[session] (
   /** Stores `df` as a table version, so later statements read its rows
     * instead of replaying its plan over the source file.
     *
-    * A version whose estimated size (`optimizedPlan.stats.sizeInBytes`)
-    * is at most `spark.sql.autoBroadcastJoinThreshold` is collected into
-    * a driver-resident `LocalRelation`: that is the estimate and the
-    * bound Spark itself uses to decide a relation is small enough to
-    * ship to every task from the driver, so the driver already holds
-    * relations that size. The optimiser then answers filters and
-    * projections of it — point SELECTs, UPDATE, DELETE — on the driver
-    * with no Spark job. A larger version stays distributed: persisted
-    * `MEMORY_AND_DISK` and counted, so its plan is read from the cache,
-    * not re-run. A failure while computing the rows throws from here. */
+    * A version that [[graft.ops.Lineage.fitsOnDriver]] is collected into
+    * a driver-resident `LocalRelation`. The optimiser then answers
+    * filters and projections of it — point SELECTs, UPDATE, DELETE — on
+    * the driver with no Spark job. A larger version stays distributed:
+    * persisted `MEMORY_AND_DISK` and counted, so its plan is read from
+    * the cache, not re-run. A failure while computing the rows throws
+    * from here. */
   private def materialise(df: DataFrame): DataFrame = {
-    val plan = df.queryExecution.optimizedPlan
-    if (plan.stats.sizeInBytes <= spark.sessionState.conf.autoBroadcastJoinThreshold) {
-      val rows = plan match {
+    if (graft.ops.Lineage.fitsOnDriver(df)) {
+      val rows = df.queryExecution.optimizedPlan match {
         // an INSERT on a driver-resident version unions two local
         // relations, which Catalyst does not fold into one (it does fold
         // filters and projections of one): concatenate them here rather

@@ -1,5 +1,8 @@
 package graft.streaming
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -275,26 +278,99 @@ object EventStreams {
     * re-emitted — the Bloom no-false-negative guarantee; a small
     * deterministic fraction of genuinely-new values is falsely dropped
     * (classic Bloom false positives — size numBits for the tolerated
-    * rate). Ordering and replay: [[admit]]; the absorb is idempotent
-    * because bits are appended and combined by bit_or. */
+    * rate). Null values are dropped, and keys match null-safely.
+    *
+    * Two paths compute a batch's admissions. When the batch and the
+    * index both [[graft.ops.Lineage.fitsOnDriver]] (estimated size at
+    * most `spark.sql.autoBroadcastJoinThreshold`) and their key and value
+    * types compare on the driver as Spark compares them,
+    * [[bloomScreenOnDriver]] collects both and probes on the driver:
+    * two collects and two one-file appends, no shuffle. Otherwise
+    * [[bloomScreenOnSpark]] runs the probe and the sketch as Spark
+    * plans. Both probe the same distinct non-null pairs against the
+    * bitmap as it stood before the batch, with bit positions from the
+    * one hash ([[graft.ops.Sketch.cmBucket]], evaluated by Spark on both
+    * paths), so they admit the same pairs and append the same
+    * `(key, word_idx, bits)` rows. Both write through [[admit]], so the
+    * out-before-index ordering and the replay argument are the same; the
+    * absorb is idempotent because bits are appended and combined by
+    * bit_or. */
   def streamingBloomScreen(stream: DataFrame, keyCol: String, valueCol: String,
       indexPath: String, outPath: String,
       checkpoint: String): StreamingQuery =
     screen(stream, checkpoint) { (batch, _) =>
-      // null VALUES are dropped to mirror the index build side (which
-      // never stores them): a null probe reports definitely-absent,
-      // so without this filter a (key, null) pair would be re-admitted
-      // in EVERY batch — its bits can never be stored
-      val pairs = batch.select(col(keyCol), col(valueCol))
-        .filter(col(valueCol).isNotNull).distinct()
-      // probeBloomIndex heals the index's swap crash window first
-      val fresh = graft.ops.Sketch
-        .probeBloomIndex(batch.sparkSession, indexPath, pairs, keyCol, valueCol)
-        .filter(!col("may_contain"))
-        .select(col("key").as(keyCol), col("value").as(valueCol))
-      admit(fresh, outPath)(
-        graft.ops.Sketch.appendToBloomIndex(_, keyCol, valueCol, indexPath))
+      val (fresh, absorb) = bloomScreenOnDriver(batch, keyCol, valueCol, indexPath)
+        .getOrElse(bloomScreenOnSpark(batch, keyCol, valueCol, indexPath))
+      admit(fresh, outPath)(absorb)
     }
+
+  /** A Bloom-screened batch's admissions and the absorb that appends
+    * their bits to the index, as [[admit]] takes them. */
+  private[streaming] type BloomAdmission = (DataFrame, DataFrame => Unit)
+
+  /** [[streamingBloomScreen]]'s distributed path. */
+  private[streaming] def bloomScreenOnSpark(batch: DataFrame, keyCol: String,
+      valueCol: String, indexPath: String): BloomAdmission = {
+    // null VALUES are dropped to mirror the index build side (which
+    // never stores them): a null probe reports definitely-absent,
+    // so without this filter a (key, null) pair would be re-admitted
+    // in EVERY batch — its bits can never be stored
+    val pairs = batch.select(col(keyCol), col(valueCol))
+      .filter(col(valueCol).isNotNull).distinct()
+    // probeBloomIndex heals the index's swap crash window first
+    val fresh = graft.ops.Sketch
+      .probeBloomIndex(batch.sparkSession, indexPath, pairs, keyCol, valueCol)
+      .filter(!col("may_contain"))
+      .select(col("key").as(keyCol), col("value").as(valueCol))
+    (fresh, graft.ops.Sketch.appendToBloomIndex(_, keyCol, valueCol, indexPath))
+  }
+
+  /** [[streamingBloomScreen]]'s driver path, or None when the batch or
+    * the index does not fit on the driver, or a key or value type does
+    * not compare there as Spark compares it. Collects the index rows
+    * once, `bit_or`ing them per `(key, word_idx)`, and the batch's
+    * non-null `(key, value, positions)` once; the fresh pairs and their
+    * bits come back as local relations, each appended as one file. */
+  private[streaming] def bloomScreenOnDriver(batch: DataFrame, keyCol: String,
+      valueCol: String, indexPath: String): Option[BloomAdmission] = {
+    val spark = batch.sparkSession
+    val (numBits, numHashes) = graft.ops.Sketch.readBloomMeta(spark, indexPath)
+    val index = graft.ops.Sketch.readBloomRows(spark, indexPath)
+    val probes = batch.filter(col(valueCol).isNotNull).select(col(keyCol), col(valueCol),
+      array((0 until numHashes).map(i => graft.ops.Sketch.cmBucket(col(valueCol), i, numBits)): _*))
+    val (keyType, valueType) = (probes.schema(0).dataType, probes.schema(1).dataType)
+    if (index.schema("key").dataType != keyType || !driverComparable(keyType) ||
+        !driverComparable(valueType) ||
+        !graft.ops.Lineage.fitsOnDriver(batch) || !graft.ops.Lineage.fitsOnDriver(index)) None
+    else {
+      def word(k: Any, p: Long) = (k, (p / 63).toInt)
+      def bit(p: Long) = 1L << (p % 63)
+      val before = mutable.Map.empty[(Any, Int), Long].withDefaultValue(0L)
+      index.collect().foreach(r => before((r.get(0), r.getInt(1))) |= r.getLong(2))
+      // distinct pairs; a pair is fresh unless ALL its bits were set
+      val fresh = probes.collect().map(r => (r.get(0), r.get(1)) -> r.getSeq[Long](2)).toMap
+        .filterNot { case ((k, _), ps) => ps.forall(p => (before(word(k, p)) & bit(p)) != 0) }
+      val bits = mutable.Map.empty[(Any, Int), Long].withDefaultValue(0L)
+      for (((k, _), ps) <- fresh; p <- ps) bits(word(k, p)) |= bit(p)
+      val admitted = spark.createDataFrame(
+        fresh.keys.map { case (k, v) => Row(k, v) }.toSeq.asJava,
+        StructType(Seq(StructField(keyCol, keyType), StructField(valueCol, valueType))))
+      val absorbed = spark.createDataFrame(
+        bits.map { case ((k, w), b) => Row(k, w, b) }.toSeq.asJava, index.schema)
+      Some((admitted.coalesce(1),
+        _ => absorbed.coalesce(1).write.mode("append").parquet(indexPath)))
+    }
+  }
+
+  /** Types whose collected values are equal exactly when Spark's
+    * grouping and null-safe join call them equal. Not floating point
+    * (Spark folds -0.0 into 0.0 and every NaN into one value), collated
+    * strings, binary or nested values. */
+  private def driverComparable(t: DataType): Boolean = t match {
+    case StringType | BooleanType | ByteType | ShortType | IntegerType | LongType |
+        DateType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
 
   /** Continuous EXACT first-occurrence screen over a persisted digest
     * index ([[graft.ops.Dedup.writeDigestIndex]]) — the

@@ -24,32 +24,43 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     p.toString
   }
 
-  /** Jobs launched on this thread by `body`, counted by a SparkListener.
-    * A marked sentinel job closes the window: listener events arrive in
-    * order, so once it is seen every earlier job start has been too. */
+  /** Jobs launched on this thread by `body`, counted by a SparkListener. */
   def jobsDuring(body: => Unit): Int = {
     val sc = spark.sparkContext
     val group = s"counted-jobs-${java.util.UUID.randomUUID()}"
     val jobs = new AtomicInteger(0)
-    val closed = Promise[Unit]()
-    val listener = new SparkListener {
+    sc.setJobGroup(group, "counted jobs")
+    listenDuring(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group).foreach { p =>
-          if (p.getProperty("graft.test.sentinel") == "1") closed.trySuccess(())
-          else jobs.incrementAndGet()
-        }
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    })(try body finally sc.clearJobGroup())
+    jobs.get
+  }
+
+  /** Runs `body` with `listener` registered, and returns once the
+    * listener has seen every event of the jobs `body` launched, on any
+    * thread. A marked sentinel job closes the window: listener events
+    * arrive in order, so once its start is seen every earlier event has
+    * been too. */
+  def listenDuring(listener: SparkListener)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val closed = Promise[Unit]()
+    val sentinel = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.sentinel") == "1"))
+          closed.trySuccess(())
     }
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, "counted jobs")
+    sc.addSparkListener(sentinel)
     try {
       body
       sc.setLocalProperty("graft.test.sentinel", "1")
       sc.parallelize(Seq(1), 1).count()
       Await.result(closed.future, 60.seconds)
-      jobs.get
     } finally {
       sc.setLocalProperty("graft.test.sentinel", null)
-      sc.clearJobGroup()
+      sc.removeSparkListener(sentinel)
       sc.removeSparkListener(listener)
     }
   }

@@ -222,6 +222,8 @@ class SketchSpec extends SparkSpec {
     val path = dir.resolve("idx").toString
     Sketch.writeBloomIndex(day1, "key", "v", path, numBits = 8192, numHashes = 4)
     assert(Sketch.readBloomMeta(spark, path) == ((8192, 4)))
+    // the writer memoizes the row schema a reader infers from the files
+    assert(Sketch.readBloomRows(spark, path).schema == spark.read.parquet(path).schema)
     Sketch.appendToBloomIndex(day2, "key", "v", path)
     // multi-segment probes ≡ a fresh sketch of the union
     val probes = ((0 until 50).map(i => ("k", "d1-" + i)) ++
@@ -239,6 +241,7 @@ class SketchSpec extends SparkSpec {
     // compaction: one row per (key, word_idx), probes unchanged
     Sketch.compactBloomIndex(spark, path)
     val rows = spark.read.parquet(path)
+    assert(Sketch.readBloomRows(spark, path).schema == rows.schema)
     assert(rows.groupBy("key", "word_idx").count().filter(col("count") > 1).isEmpty)
     assert(probeMap(Sketch.probeBloomIndex(spark, path, probes, "key", "value")) == viaIndex)
     // heal: recover the delete→rename crash window at the next read

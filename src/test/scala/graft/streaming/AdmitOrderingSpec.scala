@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import graft.SparkSpec
 import graft.ops.Sketch
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 
@@ -13,7 +14,12 @@ import org.apache.spark.sql.streaming.StreamingQueryException
 class AdmitOrderingSpec extends SparkSpec {
   import spark.implicits._
 
-  test("a crash between the out write and the index append replays the batch as duplicates, never loss") {
+  /** Runs a Bloom screen whose body takes its admissions and absorb from
+    * `admission(batch, indexPath)`, with the absorb wrapped to throw once
+    * before it appends; restarts from the same checkpoint and checks the
+    * replay. */
+  private def crashBetweenWrites(
+      admission: (DataFrame, String) => EventStreams.BloomAdmission): Unit = {
     val dir = tmpDir("admit-fault-")
     val idx = dir.resolve("idx").toString
     val outP = dir.resolve("out").toString
@@ -39,12 +45,11 @@ class AdmitOrderingSpec extends SparkSpec {
     def run(): Unit = {
       val stream = spark.readStream.schema(feed.schema).parquet(feedP)
       val q = EventStreams.screen(stream, ck) { (batch, _) =>
-        val fresh = Sketch.probeBloomIndex(batch.sparkSession, idx, batch, "key", "value")
-          .filter(!col("may_contain")).select(col("key"), col("value"))
+        val (fresh, absorb) = admission(batch, idx)
         EventStreams.admit(fresh, outP) { rows =>
           if (crashed.compareAndSet(false, true))
             throw new IllegalStateException("injected crash before the index append")
-          Sketch.appendToBloomIndex(rows, "key", "value", idx)
+          absorb(rows)
         }
       }
       try q.processAllAvailable() finally q.stop()
@@ -64,5 +69,20 @@ class AdmitOrderingSpec extends SparkSpec {
     assert(after == admitted.flatMap(r => Seq(r, r)),
       "the only extra rows are one duplicate of each replayed row")
     assert(probe(admitted).forall(identity), "the index holds the batch after the replay")
+  }
+
+  test("a crash between the out write and the index append replays the batch as duplicates, never loss") {
+    crashBetweenWrites { (batch, idx) =>
+      (Sketch.probeBloomIndex(batch.sparkSession, idx, batch, "key", "value")
+          .filter(!col("may_contain")).select(col("key"), col("value")),
+        Sketch.appendToBloomIndex(_, "key", "value", idx))
+    }
+  }
+
+  test("a crash before the driver-path absorb replays the batch as duplicates, never loss") {
+    crashBetweenWrites { (batch, idx) =>
+      EventStreams.bloomScreenOnDriver(batch, "key", "value", idx)
+        .getOrElse(throw new IllegalStateException("the feed batch did not take the driver path"))
+    }
   }
 }
