@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Repartition}
 
 /** Lineage truncation for iterative operators (PageRank, connected
   * components, k-means, minhash closure): every iteration's plan would
@@ -68,4 +69,24 @@ object Lineage {
   def fitsOnDriver(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.stats.sizeInBytes <=
       df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+
+  /** True iff `plan` is a driver-resident relation: a `LocalRelation`,
+    * bare or behind `coalesce(1)`.
+    *
+    * A session reads its driver-resident table versions behind
+    * `coalesce(1)`. Spark slices a bare `LocalRelation` into up to
+    * `defaultParallelism` partitions of unknown partitioning, so every
+    * aggregate, window, DISTINCT or sort over it plans a hash or range
+    * exchange. Behind `coalesce(1)` it is one partition (`CoalesceExec`
+    * reports `SinglePartition`, which meets every clustered and ordered
+    * distribution), so such a query runs as one task with no shuffle. One
+    * task is the right plan for it: a relation is held on the driver only
+    * when it [[fitsOnDriver]], and in a join it is the broadcast side
+    * anyway. The coalesce does stop the optimiser from folding filters and
+    * projections of the relation on the driver, so a caller that wants
+    * them folded reads the relation bare. */
+  def isDriverResident(plan: LogicalPlan): Boolean = plan match {
+    case _: LocalRelation | Repartition(1, false, _: LocalRelation) => true
+    case _ => false
+  }
 }

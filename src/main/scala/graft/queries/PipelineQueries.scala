@@ -3367,10 +3367,13 @@ object PipelineQueries {
         .select(col("event_type"), col("value"))
       graft.ops.Sketch.writeBloomIndex(third(0), "event_type", "value", idx,
         numBits = 65536, numHashes = 3)
-      runFeeds(s, base, Seq(1, 2).map(r => r.toString -> third(r))) { (_, stream, ck) =>
+      val feeds = Seq(1, 2).map(r => r.toString -> third(r))
+      runFeeds(s, base, feeds) { (_, stream, ck) =>
         EventStreams.streamingBloomScreen(stream, "event_type", "value", idx, outP, ck)
       }
-      s.read.parquet(outP).distinct()
+      // the out feed holds the feeds' (key, value) columns: read it with
+      // their schema, so no job infers it from the footers
+      s.read.schema(feeds.head._2.schema).parquet(outP).distinct()
         .orderBy(col("event_type"), col("value"))
     }),
 

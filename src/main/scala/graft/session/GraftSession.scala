@@ -6,10 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LocalRelation,
+  LogicalPlan, Project, Repartition, SubqueryAlias, Union, View}
+import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.storage.StorageLevel
 
 import graft._
+import graft.ops.Lineage
 import graft.sources._
 import graft.sinks.{Dump, DumpOptions}
 import graft.mutate.Mutations
@@ -96,7 +99,7 @@ final class GraftSession private[session] (
     spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW ${quoteSparkIdent(name)} AS $select")
 
   private def registerAll(): Unit = {
-    tables.foreach { case (name, df) => df.createOrReplaceTempView(name) }
+    tables.foreach { case (name, df) => registerTable(name, df) }
     // the SELECT was captured once by CreateViewRe at creation — never
     // re-parsed (a quoted view name containing " as " would mis-split,
     // and a parse failure here inside restoreSnapshot would abort a
@@ -131,9 +134,18 @@ final class GraftSession private[session] (
   def table(name: String): DataFrame =
     tables.getOrElse(name, throw InvalidSqlError(name, "no such table"))
 
+  /** Stores `df` as table `name`. The table map keeps `df` itself, which
+    * DML and the dumps read; SQL reads the view, which holds a
+    * driver-resident version as one partition
+    * ([[graft.ops.Lineage.isDriverResident]] says why). */
   private def install(name: String, df: DataFrame): Unit = {
     tables.update(name, df)
-    df.createOrReplaceTempView(name)
+    registerTable(name, df)
+  }
+
+  private def registerTable(name: String, df: DataFrame): Unit = {
+    val local = df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+    (if (local) df.coalesce(1) else df).createOrReplaceTempView(name)
   }
 
   // ------------------------------------------------------------ versions
@@ -151,14 +163,17 @@ final class GraftSession private[session] (
     * instead of replaying its plan over the source file.
     *
     * A version that [[graft.ops.Lineage.fitsOnDriver]] is collected into
-    * a driver-resident `LocalRelation`. The optimiser then answers
-    * filters and projections of it — point SELECTs, UPDATE, DELETE — on
-    * the driver with no Spark job. A larger version stays distributed:
+    * a driver-resident `LocalRelation`, which [[install]] registers as
+    * one partition ([[graft.ops.Lineage.isDriverResident]]). The optimiser
+    * folds filters and projections of it — point SELECTs, UPDATE,
+    * DELETE, the rows of an INSERT … SELECT ([[uncoalesced]]) — on the
+    * driver with no Spark job. A larger version stays distributed:
     * persisted `MEMORY_AND_DISK` and counted, so its plan is read from
     * the cache, not re-run. A failure while computing the rows throws
     * from here. */
-  private def materialise(df: DataFrame): DataFrame = {
-    if (graft.ops.Lineage.fitsOnDriver(df)) {
+  private def materialise(planned: DataFrame): DataFrame = {
+    val df = uncoalesced(planned)
+    if (Lineage.fitsOnDriver(df)) {
       val rows = df.queryExecution.optimizedPlan match {
         // an INSERT on a driver-resident version unions two local
         // relations, which Catalyst does not fold into one (it does fold
@@ -190,6 +205,24 @@ final class GraftSession private[session] (
   private def rowCount(df: DataFrame): Long = df.queryExecution.optimizedPlan match {
     case local: LocalRelation => local.data.length
     case _ => df.count()
+  }
+
+  /** `df` reading its driver-resident relations bare when it only
+    * projects, filters and limits them (a point SELECT, a
+    * read-after-write, the rows of an INSERT … SELECT): such a plan needs
+    * no single partition, and over the bare relation the optimiser folds
+    * it on the driver (`ConvertToLocalRelation`) with no Spark job. The
+    * coalesce is removed from the analyzed plan, so the optimiser runs
+    * once, over the folded shape. Any other frame as it is. */
+  private def uncoalesced(df: DataFrame): DataFrame = {
+    def folds(p: LogicalPlan): Boolean = p match {
+      case _: Project | _: Filter | _: GlobalLimit | _: LocalLimit | _: SubqueryAlias | _: View =>
+        p.children.forall(folds)
+      case _ => Lineage.isDriverResident(p)
+    }
+    val plan = df.queryExecution.analyzed
+    if (!plan.exists(_.isInstanceOf[Repartition]) || !folds(plan)) df
+    else DatasetBridge.ofRows(spark, plan.transformUp { case r: Repartition => r.child })
   }
 
   // -------------------------------------------------------- transactions
@@ -721,7 +754,7 @@ final class GraftSession private[session] (
         if (inTransaction) txnDirty = true
         else if (!inTriggerBody && autoSave.exists(_.onCommit)) performAutoSave()
         spark.emptyDataFrame
-      case None => spark.sql(statement)
+      case None => uncoalesced(spark.sql(statement))
     }
   }
 

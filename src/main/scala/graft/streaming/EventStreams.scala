@@ -184,10 +184,12 @@ object EventStreams {
   /** Admit a screened micro-batch: persist `admitted`, append
     * `project(admitted)` to the `outPath` parquet feed, THEN run `absorb`
     * (the screen's index append) on the full persisted frame, then
-    * unpersist. This is the one place the screens' write ordering is
-    * defined, and the order is load-bearing: a crash between the two
-    * writes replays the batch ([[screen]]) against an index that does not
-    * hold it yet, so the replay admits the same rows again —
+    * unpersist; a driver-resident `admitted`
+    * ([[graft.ops.Lineage.isDriverResident]]) already holds its rows, so it
+    * is written with no persist. This is the one place the screens' write
+    * ordering is defined, and the order is load-bearing: a crash between
+    * the two writes replays the batch ([[screen]]) against an index that
+    * does not hold it yet, so the replay admits the same rows again —
     * at-least-once duplicates in `outPath`, never silently lost rows,
     * which the reverse order would produce (the index would screen out
     * rows that never reached the feed). Downstream reads dedup or
@@ -196,11 +198,14 @@ object EventStreams {
     * must be idempotent or exactly-once under replay; each screen's
     * scaladoc says which, and why. */
   private[streaming] def admit(admitted: DataFrame, outPath: String,
-      project: DataFrame => DataFrame = identity)(absorb: DataFrame => Unit): Unit =
-    persisted(admitted) { a =>
+      project: DataFrame => DataFrame = identity)(absorb: DataFrame => Unit): Unit = {
+    def write(a: DataFrame): Unit = {
       project(a).write.mode("append").parquet(outPath)
       absorb(a)
     }
+    if (graft.ops.Lineage.isDriverResident(admitted.queryExecution.analyzed)) write(admitted)
+    else persisted(admitted)(write)
+  }
 
   private def persisted[A](df: DataFrame)(f: DataFrame => A): A = {
     val p = df.persist()

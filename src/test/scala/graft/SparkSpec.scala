@@ -1,11 +1,12 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,17 +26,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Jobs launched on this thread by `body`, counted by a SparkListener. */
-  def jobsDuring(body: => Unit): Int = {
+  def jobsDuring(body: => Unit): Int = jobStagesDuring(body).length
+
+  /** The jobs launched on this thread by `body`, each as its stages,
+    * recorded by a SparkListener. */
+  def jobStagesDuring(body: => Unit): Seq[Seq[StageInfo]] = {
     val sc = spark.sparkContext
     val group = s"counted-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
+    val jobs = new ConcurrentLinkedQueue[Seq[StageInfo]]()
     sc.setJobGroup(group, "counted jobs")
     listenDuring(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+          jobs.add(e.stageInfos)
     })(try body finally sc.clearJobGroup())
-    jobs.get
+    jobs.asScala.toSeq
   }
 
   /** Runs `body` with `listener` registered, and returns once the

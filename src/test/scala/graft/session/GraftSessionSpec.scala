@@ -59,6 +59,27 @@ class GraftSessionSpec extends SparkSpec with SessionFlows {
     s2.close()
   }
 
+  test("Dump.writeTable of a mutated table writes one parquet or csv file with its rows") {
+    val dir = tmpDir("dump-mutated")
+    fixtures(dir)
+    val s = GraftSession.open(spark, dir.toString)
+    s.sql("INSERT INTO users VALUES (4, 'Dan', 'user', 20)")
+    s.sql("DELETE FROM users WHERE id = 1")
+    val want = Seq("2|Bob|user|20", "3|Carol|user|10", "4|Dan|user|20")
+    Seq("parquet", "csv").foreach { format =>
+      val out = tmpDir(s"dump-mutated-$format")
+      graft.sinks.Dump.writeTable(s.table("users"), "users", out.toString, DumpOptions(format))
+      val files = java.nio.file.Files.list(out)
+      try assert(files.iterator().asScala.map(_.getFileName.toString).toSeq == Seq(s"users.$format"))
+      finally files.close()
+      val back = GraftSession.open(spark, out.resolve(s"users.$format").toString)
+      assert(back.sql("SELECT * FROM users ORDER BY id").collect().map(_.mkString("|")).toSeq == want,
+        format)
+      back.close()
+    }
+    s.close()
+  }
+
   test("auto-save on close writes mutated state (S17)") {
     val dir = tmpDir("autosave")
     fixtures(dir)

@@ -11,6 +11,7 @@ class PersistedVersionSpec extends SparkSpec with SessionFlows {
 
   private val flows: Seq[(String, () => Seq[Seq[Any]])] = Seq(
     "INSERT / UPDATE / DELETE" -> (() => mutationFlow()),
+    "SELECT" -> (() => selectFlow()),
     "transaction" -> (() => transactionFlow()),
     "SAVEPOINT" -> (() => savepointFlow()),
     "changes() and rowid" -> (() => changesFlow()),

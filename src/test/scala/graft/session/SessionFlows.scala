@@ -59,6 +59,45 @@ trait SessionFlows { self: SparkSpec =>
     finalRows(s, "users")
   }
 
+  /** SELECTs of each class over a mutated table, one of them joined with
+    * an unmutated table, then the same over the table emptied by DELETE. */
+  def selectFlow(): Seq[Seq[Any]] = {
+    val dir = tmpDir("select")
+    fixtures(dir)
+    val s = GraftSession.open(spark, dir.toString)
+    s.sql("INSERT INTO users VALUES (4, 'Dan', 'user', 20), (5, 'Eve', 'admin', 10)")
+    s.sql("UPDATE users SET role = 'lead' WHERE id = 2")
+    def rows(q: String): Seq[String] = s.sql(q).collect().map(_.mkString("|")).toSeq
+    val queries = Seq(
+      "SELECT role, count(*), sum(id) FROM users GROUP BY role ORDER BY role",
+      "SELECT id, row_number() OVER (PARTITION BY department_id ORDER BY id DESC) FROM users ORDER BY id",
+      "WITH d AS (SELECT department_id, count(*) AS n FROM users GROUP BY department_id) " +
+        "SELECT sum(n), max(n) FROM d",
+      "SELECT DISTINCT role FROM users ORDER BY role",
+      "SELECT id FROM users ORDER BY id LIMIT 2 OFFSET 1",
+      "SELECT u.name, d.dept FROM users u JOIN departments d ON d.id = u.department_id ORDER BY u.id",
+      "SELECT department_id, length(group_concat(name, ',')) FROM users " +
+        "GROUP BY department_id ORDER BY department_id",
+      "SELECT name FROM users WHERE id = 4")
+    val mutated = queries.map(rows)
+    assert(mutated == Seq(
+      Seq("admin|2|6", "lead|1|2", "user|2|7"),
+      Seq("1|3", "2|2", "3|2", "4|1", "5|1"),
+      Seq("5|3"),
+      Seq("admin", "lead", "user"),
+      Seq("2", "3"),
+      Seq("Alice|Engineering", "Bob|Sales", "Carol|Engineering", "Dan|Sales", "Eve|Engineering"),
+      Seq("10|15", "20|7"),
+      Seq("Dan")))
+    s.sql("DELETE FROM users")
+    assert(s.sql("SELECT changes()").head().getLong(0) == 5)
+    val emptied = queries.map(rows)
+    assert(emptied == Seq(Seq(), Seq(), Seq("null|null"), Seq(), Seq(), Seq(), Seq(), Seq()))
+    assert(rows("SELECT count(*) FROM users") == Seq("0"))
+    s.close()
+    mutated ++ emptied
+  }
+
   def transactionFlow(): Seq[Seq[Any]] = {
     val dir = tmpDir("txn")
     fixtures(dir)
