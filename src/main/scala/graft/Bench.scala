@@ -122,7 +122,7 @@ object Bench {
       s"""{"metric":"total","value":$total,"unit":"sec","calib":$calib,"outlier_reruns":$reruns,"queries":$qs,"sf":"$sfDir"}"""
     }
 
-    val queryList = SparkEntry.queries.toSeq.sortBy(_._1)
+    val queryList = SparkEntry.gates.map(g => g.name -> g.run).sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val resultsBuf = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     queryList.foreach { case (name, fn) =>

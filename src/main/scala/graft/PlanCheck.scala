@@ -11,7 +11,9 @@ object PlanCheck {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n================ $n ================")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      val gate = SparkEntry.gates.find(_.name == n)
+        .getOrElse(sys.error(s"no gate named $n"))
+      gate.run(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -12,9 +12,9 @@ import graft.queries._
   * see COVERAGE.md; its distributed banding operator is oracle-checked
   * separately as d07, and the LSH/IVF/PQ/int8 ANN gates run with
   * deterministic SQL-expressible quantizers so DuckDB reproduces
-  * bucketing, probing, encoding and ranking exactly). The exact counts
-  * are pinned by `SparkEntrySpec` (`queries.size == oracleSql.size + 1`),
-  * so this comment cannot silently rot.
+  * bucketing, probing, encoding and ranking exactly). `SparkEntrySpec`
+  * pins the rows-only set (`gates.filter(_.oracle.isEmpty)` is d03
+  * alone), so this comment cannot silently rot.
   * Query name groups:
   *   - q01–q34  relational SQL surface (SURVEY §2.2) + engine supersets
   *   - m01–m09  DML mutation layer (INSERT/UPDATE/DELETE on views) +
@@ -54,16 +54,27 @@ import graft.queries._
   *              demos)
   */
 object SparkEntry {
+  /** Every gate, each declared once with its oracle beside its body (one
+    * object per family under `graft.queries`). Names are unique. */
+  val gates: Seq[Gate] = {
+    val all = RelationalQueries.gates ++ SourceQueries.gates ++
+      DedupGates.gates ++ EntityGates.gates ++ SearchGates.gates ++
+      TextGates.gates ++ MediaGates.gates ++ EventGates.gates ++
+      ComposedGates.gates ++ KernelGates.gates
+    val dup = all.groupBy(_.name).collect { case (n, gs) if gs.size > 1 => n }
+    require(dup.isEmpty, s"gate names declared twice: ${dup.toSeq.sorted.mkString(", ")}")
+    all
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    RelationalQueries.queries("q03_join_revenue")(spark, "/root/testdata/sf0.001")
+    gates.find(_.name == "q03_join_revenue").get.run(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Each gate's Spark query by name (derived from [[gates]]). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ SourceQueries.queries ++ PipelineQueries.queries
+    gates.map(g => g.name -> g.run).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+  /** Each oracle-checked gate's DuckDB SQL by name (derived from [[gates]]). */
   def oracleSql: Map[String, String] =
-    RelationalQueries.oracleSql ++ SourceQueries.oracleSql ++ PipelineQueries.oracleSql
+    gates.flatMap(g => g.oracle.map(g.name -> _)).toMap
 }

@@ -37,52 +37,72 @@ object SourceQueries {
     }
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val gates: Seq[Gate] = Seq(
     // S1 + S11: CSV sink → CSV scan → inference
-    "src_csv_roundtrip" -> ((s, dir) =>
+    Gate("src_csv_roundtrip", Some(
+      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
+        |  CAST(n_regionkey AS BIGINT) AS n_regionkey
+        |FROM nation ORDER BY n_nationkey""".stripMargin))((s, dir) =>
       roundTrip(s, dir, "nation", "csv")
         .select("n_nationkey", "n_name", "n_regionkey").orderBy("n_nationkey")),
 
     // S2 + S11: TSV
-    "src_tsv_roundtrip" -> ((s, dir) =>
+    Gate("src_tsv_roundtrip", Some(
+      """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name
+        |FROM region ORDER BY r_regionkey""".stripMargin))((s, dir) =>
       roundTrip(s, dir, "region", "tsv")
         .select("r_regionkey", "r_name").orderBy("r_regionkey")),
 
     // S3 + S12: LTSV (note: LTSV columns come back key-sorted)
-    "src_ltsv_roundtrip" -> ((s, dir) =>
+    Gate("src_ltsv_roundtrip", Some(
+      """SELECT s_suppkey, s_name, CAST(s_nationkey AS BIGINT) AS s_nationkey, s_acctbal
+        |FROM supplier ORDER BY s_suppkey""".stripMargin))((s, dir) =>
       roundTrip(s, dir, "supplier", "ltsv")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal").orderBy("s_suppkey")),
 
     // S5 + S14: XLSX writer → zip/XML reader
-    "src_xlsx_roundtrip" -> ((s, dir) =>
+    Gate("src_xlsx_roundtrip", Some(
+      """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name
+        |FROM region ORDER BY r_regionkey""".stripMargin))((s, dir) =>
       roundTrip(s, dir, "region", "xlsx")
         .select("r_regionkey", "r_name").orderBy("r_regionkey")),
 
     // S4 + S13: single-file parquet sink → native parquet scan (typed superset)
-    "src_parquet_roundtrip" -> ((s, dir) =>
+    Gate("src_parquet_roundtrip", Some(
+      """SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey"""))((s, dir) =>
       roundTrip(s, dir, "nation", "parquet")
         .select("n_nationkey", "n_name", "n_regionkey").orderBy("n_nationkey")),
 
     // Superset: single-file ORC sink → native ORC scan (typed columnar
     // alternative to parquet; int32/double/string survive untouched)
-    "src_orc_roundtrip" -> ((s, dir) =>
+    Gate("src_orc_roundtrip", Some(
+      """SELECT s_suppkey, s_name, s_nationkey, s_acctbal
+        |FROM supplier ORDER BY s_suppkey""".stripMargin))((s, dir) =>
       roundTrip(s, dir, "supplier", "orc")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal").orderBy("s_suppkey")),
 
     // Superset: JSONL sink → JSONL scan (typed: numbers come back
     // BIGINT/DOUBLE natively, no string-cast pipeline)
-    "src_jsonl_roundtrip" -> ((s, dir) =>
+    Gate("src_jsonl_roundtrip", Some(
+      """SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority
+        |FROM orders ORDER BY o_orderkey""".stripMargin))((s, dir) =>
       roundTrip(s, dir, "orders", "jsonl")
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
         .orderBy("o_orderkey")),
 
     // S6 + S15: zstd-compressed CSV (exercises the non-Hadoop-native codec shim)
-    "src_zstd_csv_roundtrip" -> ((s, dir) =>
+    Gate("src_zstd_csv_roundtrip", Some(
+      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
+        |  CAST(n_regionkey AS BIGINT) AS n_regionkey
+        |FROM nation ORDER BY n_nationkey""".stripMargin))((s, dir) =>
       roundTrip(s, dir, "nation", "csv", Some(Compression.Zstd))
         .select("n_nationkey", "n_name", "n_regionkey").orderBy("n_nationkey")),
 
     // S7 + session facade: directory open → temp views → SQL join
-    "src_session_join" -> ((s, dir) => {
+    Gate("src_session_join", Some(
+      """SELECT r_name, COUNT(*) AS n_nations
+        |FROM nation JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name ORDER BY r_name""".stripMargin))((s, dir) => {
       val tmp = graft.Paths.scratchDir("graft-sess-")
       Dump.writeTable(Tables.load(s, dir, "nation"), "nation_f", tmp.toString, DumpOptions("csv"))
       Dump.writeTable(Tables.load(s, dir, "region"), "region_f", tmp.toString, DumpOptions("tsv"))
@@ -98,7 +118,13 @@ object SourceQueries {
 
     // Mutation layer: INSERT … SELECT (positional mapping, SQLite
     // semantics) on a view
-    "m04_insert_select" -> ((s, dir) => {
+    Gate("m04_insert_select", Some(
+      """SELECT n_nationkey, n_name, n_regionkey FROM (
+        |  SELECT n_nationkey, n_name, n_regionkey FROM nation
+        |  UNION ALL
+        |  SELECT n_nationkey + 100, upper(n_name), n_regionkey
+        |  FROM nation WHERE n_regionkey = 0)
+        |ORDER BY n_nationkey""".stripMargin))((s, dir) => {
       val sess = GraftSession.open(s, s"$dir/nation.parquet")
       sess.sql("""INSERT INTO nation
         SELECT n_nationkey + 100, upper(n_name), n_regionkey
@@ -111,7 +137,10 @@ object SourceQueries {
     }),
 
     // Mutation layer: INSERT on a view
-    "m01_insert" -> ((s, dir) => {
+    Gate("m01_insert", Some(
+      """SELECT n_nationkey, n_name, n_regionkey FROM (
+        |  SELECT * FROM nation UNION ALL SELECT 25, 'ATLANTIS', 0)
+        |ORDER BY n_nationkey""".stripMargin))((s, dir) => {
       val sess = GraftSession.open(s, s"$dir/nation.parquet")
       sess.sql("INSERT INTO nation VALUES (25, 'ATLANTIS', 0)")
       val out = sess.sql(
@@ -122,7 +151,9 @@ object SourceQueries {
     }),
 
     // Mutation layer: UPDATE on a view
-    "m02_update" -> ((s, dir) => {
+    Gate("m02_update", Some(
+      """SELECT o_orderkey, 'X' AS o_orderstatus FROM orders
+        |WHERE o_totalprice > 400000 ORDER BY o_orderkey""".stripMargin))((s, dir) => {
       val sess = GraftSession.open(s, s"$dir/orders.parquet")
       sess.sql("UPDATE orders SET o_orderstatus = 'X' WHERE o_totalprice > 400000")
       val out = sess.sql(
@@ -134,7 +165,21 @@ object SourceQueries {
 
     // Merge tier: whole-row upsert (anti-join + union — one key shuffle,
     // batch side broadcastable)
-    "m05_upsert" -> ((s, dir) => {
+    Gate("m05_upsert", Some(
+      """WITH src AS (
+        |  SELECT c_custkey, c_name, c_acctbal * 2 AS c_acctbal,
+        |    'REFRESHED' AS c_mktsegment
+        |  FROM customer WHERE c_custkey % 10 = 0
+        |  UNION ALL
+        |  SELECT c_custkey + 1000000, c_name, c_acctbal, c_mktsegment
+        |  FROM customer WHERE c_custkey <= 50
+        |)
+        |SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM (
+        |  SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
+        |  WHERE c_custkey NOT IN (SELECT c_custkey FROM src)
+        |  UNION ALL
+        |  SELECT * FROM src
+        |) ORDER BY c_custkey""".stripMargin))((s, dir) => {
       val c = Tables.load(s, dir, "customer")
       val updates = c.filter(col("c_custkey") % 10 === 0)
         .withColumn("c_acctbal", col("c_acctbal") * 2)
@@ -147,7 +192,17 @@ object SourceQueries {
     }),
 
     // Merge tier: CDC apply — latest change per key wins, deletes net out
-    "m06_cdc_apply" -> ((s, dir) => {
+    Gate("m06_cdc_apply", Some(
+      """SELECT o_orderkey, o_orderstatus, o_totalprice FROM (
+        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
+        |  WHERE o_orderkey % 7 <> 0
+        |  UNION ALL
+        |  SELECT o_orderkey, o_orderstatus, o_totalprice + 1000.0 AS o_totalprice
+        |  FROM orders WHERE o_orderkey % 7 = 0 AND o_orderkey % 21 <> 0
+        |  UNION ALL
+        |  SELECT o_orderkey + 10000000, o_orderstatus, o_totalprice
+        |  FROM orders WHERE o_orderkey % 100 = 0
+        |) ORDER BY o_orderkey""".stripMargin))((s, dir) => {
       val o = Tables.load(s, dir, "orders")
       val u = o.filter(col("o_orderkey") % 7 === 0)
         .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
@@ -164,7 +219,16 @@ object SourceQueries {
 
     // Merge tier: column-level upsert — matched rows refresh ONLY the
     // listed columns, inserts land whole
-    "m07_upsert_columns" -> ((s, dir) => {
+    Gate("m07_upsert_columns", Some(
+      """SELECT c_custkey, c_name, c_acctbal FROM (
+        |  SELECT c_custkey, c_name,
+        |    CASE WHEN c_custkey % 3 = 0 THEN c_acctbal + 5.0 ELSE c_acctbal END
+        |      AS c_acctbal
+        |  FROM customer
+        |  UNION ALL
+        |  SELECT c_custkey + 2000000, c_name, c_acctbal FROM customer
+        |  WHERE c_custkey <= 20
+        |) ORDER BY c_custkey""".stripMargin))((s, dir) => {
       val c = Tables.load(s, dir, "customer")
       val src = c.filter(col("c_custkey") % 3 === 0)
         .withColumn("c_acctbal", col("c_acctbal") + 5.0)
@@ -181,7 +245,15 @@ object SourceQueries {
     // row triggers maintaining an audit table, all on the set-based
     // (INSERT … VALUES body) execution path — one audit row per affected
     // row at any mutation size, no driver loop
-    "m08_trigger" -> ((s, dir) => {
+    Gate("m08_trigger", Some(
+      """SELECT CAST(uid AS BIGINT) AS uid, act FROM (
+        |  SELECT 25 AS uid, 'I' AS act UNION ALL SELECT 26, 'I'
+        |  UNION ALL
+        |  SELECT n_nationkey, 'U:' || n_name FROM nation
+        |  WHERE n_nationkey % 3 = 0 AND n_regionkey >= 2
+        |  UNION ALL
+        |  SELECT n_nationkey, 'D' FROM nation WHERE n_regionkey = 4
+        |) ORDER BY uid, act""".stripMargin))((s, dir) => {
       val sess = GraftSession.open(s, s"$dir/nation.parquet")
       sess.sql("CREATE TABLE audit (uid INTEGER, act TEXT)")
       sess.sql("""CREATE TRIGGER ni AFTER INSERT ON nation BEGIN
@@ -205,7 +277,24 @@ object SourceQueries {
     // INSTEAD OF bodies that rewrite the base tables (the INSERT body is
     // vectorized set-based; UPDATE/DELETE bodies run per-row over the
     // small affected sets); the gate output is the final joined state
-    "m09_instead_of" -> ((s, dir) => {
+    // replay of the three view-DML statements' END STATE: inserts land
+    // whole, the region-2 rename applies to the inserted row too (it
+    // preceded the UPDATE), the %7 delete removes inserted id 31
+    Gate("m09_instead_of", Some(
+      """WITH base AS (
+        |  SELECT n_nationkey, n_name, n_regionkey FROM nation
+        |  UNION ALL SELECT 30, 'ATLANTIS', 0
+        |  UNION ALL SELECT 31, 'AVALON', 2
+        |),
+        |upd AS (
+        |  SELECT n_nationkey,
+        |    CASE WHEN n_regionkey = 2 THEN n_name || '_V' ELSE n_name END AS n_name,
+        |    n_regionkey FROM base
+        |),
+        |fin AS (SELECT * FROM upd WHERE n_nationkey % 7 <> 3)
+        |SELECT f.n_nationkey AS nkey, f.n_name AS nname, r.r_name AS rname
+        |FROM fin f JOIN region r ON r.r_regionkey = f.n_regionkey
+        |ORDER BY nkey""".stripMargin))((s, dir) => {
       val sess = GraftSession.open(s, s"$dir/nation.parquet", s"$dir/region.parquet")
       sess.sql("""CREATE VIEW nations_v AS
         |  SELECT n.n_nationkey AS nkey, n.n_name AS nname,
@@ -228,7 +317,10 @@ object SourceQueries {
     }),
 
     // Mutation layer: DELETE on a view
-    "m03_delete" -> ((s, dir) => {
+    Gate("m03_delete", Some(
+      """SELECT o_orderstatus, COUNT(*) AS n FROM orders
+        |WHERE o_orderstatus <> 'F'
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin))((s, dir) => {
       val sess = GraftSession.open(s, s"$dir/orders.parquet")
       sess.sql("DELETE FROM orders WHERE o_orderstatus = 'F'")
       val out = sess.sql(
@@ -237,135 +329,5 @@ object SourceQueries {
       sess.close()
       out
     })
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "src_csv_roundtrip" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "src_tsv_roundtrip" ->
-      """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name
-        |FROM region ORDER BY r_regionkey""".stripMargin,
-
-    "src_ltsv_roundtrip" ->
-      """SELECT s_suppkey, s_name, CAST(s_nationkey AS BIGINT) AS s_nationkey, s_acctbal
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
-
-    "src_xlsx_roundtrip" ->
-      """SELECT CAST(r_regionkey AS BIGINT) AS r_regionkey, r_name
-        |FROM region ORDER BY r_regionkey""".stripMargin,
-
-    "src_parquet_roundtrip" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey""",
-
-    "src_orc_roundtrip" ->
-      """SELECT s_suppkey, s_name, s_nationkey, s_acctbal
-        |FROM supplier ORDER BY s_suppkey""".stripMargin,
-
-    "src_jsonl_roundtrip" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "src_zstd_csv_roundtrip" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-        |  CAST(n_regionkey AS BIGINT) AS n_regionkey
-        |FROM nation ORDER BY n_nationkey""".stripMargin,
-
-    "src_session_join" ->
-      """SELECT r_name, COUNT(*) AS n_nations
-        |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-
-    "m01_insert" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM (
-        |  SELECT * FROM nation UNION ALL SELECT 25, 'ATLANTIS', 0)
-        |ORDER BY n_nationkey""".stripMargin,
-
-    "m04_insert_select" ->
-      """SELECT n_nationkey, n_name, n_regionkey FROM (
-        |  SELECT n_nationkey, n_name, n_regionkey FROM nation
-        |  UNION ALL
-        |  SELECT n_nationkey + 100, upper(n_name), n_regionkey
-        |  FROM nation WHERE n_regionkey = 0)
-        |ORDER BY n_nationkey""".stripMargin,
-
-    "m05_upsert" ->
-      """WITH src AS (
-        |  SELECT c_custkey, c_name, c_acctbal * 2 AS c_acctbal,
-        |    'REFRESHED' AS c_mktsegment
-        |  FROM customer WHERE c_custkey % 10 = 0
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000, c_name, c_acctbal, c_mktsegment
-        |  FROM customer WHERE c_custkey <= 50
-        |)
-        |SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM (
-        |  SELECT c_custkey, c_name, c_acctbal, c_mktsegment FROM customer
-        |  WHERE c_custkey NOT IN (SELECT c_custkey FROM src)
-        |  UNION ALL
-        |  SELECT * FROM src
-        |) ORDER BY c_custkey""".stripMargin,
-
-    "m06_cdc_apply" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice FROM (
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-        |  WHERE o_orderkey % 7 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_orderstatus, o_totalprice + 1000.0 AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 7 = 0 AND o_orderkey % 21 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 10000000, o_orderstatus, o_totalprice
-        |  FROM orders WHERE o_orderkey % 100 = 0
-        |) ORDER BY o_orderkey""".stripMargin,
-
-    "m07_upsert_columns" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM (
-        |  SELECT c_custkey, c_name,
-        |    CASE WHEN c_custkey % 3 = 0 THEN c_acctbal + 5.0 ELSE c_acctbal END
-        |      AS c_acctbal
-        |  FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey + 2000000, c_name, c_acctbal FROM customer
-        |  WHERE c_custkey <= 20
-        |) ORDER BY c_custkey""".stripMargin,
-
-    "m08_trigger" ->
-      """SELECT CAST(uid AS BIGINT) AS uid, act FROM (
-        |  SELECT 25 AS uid, 'I' AS act UNION ALL SELECT 26, 'I'
-        |  UNION ALL
-        |  SELECT n_nationkey, 'U:' || n_name FROM nation
-        |  WHERE n_nationkey % 3 = 0 AND n_regionkey >= 2
-        |  UNION ALL
-        |  SELECT n_nationkey, 'D' FROM nation WHERE n_regionkey = 4
-        |) ORDER BY uid, act""".stripMargin,
-
-    // replay of the three view-DML statements' END STATE: inserts land
-    // whole, the region-2 rename applies to the inserted row too (it
-    // preceded the UPDATE), the %7 delete removes inserted id 31
-    "m09_instead_of" ->
-      """WITH base AS (
-        |  SELECT n_nationkey, n_name, n_regionkey FROM nation
-        |  UNION ALL SELECT 30, 'ATLANTIS', 0
-        |  UNION ALL SELECT 31, 'AVALON', 2
-        |),
-        |upd AS (
-        |  SELECT n_nationkey,
-        |    CASE WHEN n_regionkey = 2 THEN n_name || '_V' ELSE n_name END AS n_name,
-        |    n_regionkey FROM base
-        |),
-        |fin AS (SELECT * FROM upd WHERE n_nationkey % 7 <> 3)
-        |SELECT f.n_nationkey AS nkey, f.n_name AS nname, r.r_name AS rname
-        |FROM fin f JOIN region r ON r.r_regionkey = f.n_regionkey
-        |ORDER BY nkey""".stripMargin,
-
-    "m02_update" ->
-      """SELECT o_orderkey, 'X' AS o_orderstatus FROM orders
-        |WHERE o_totalprice > 400000 ORDER BY o_orderkey""".stripMargin,
-
-    "m03_delete" ->
-      """SELECT o_orderstatus, COUNT(*) AS n FROM orders
-        |WHERE o_orderstatus <> 'F'
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
   )
 }

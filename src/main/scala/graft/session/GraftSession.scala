@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LocalRelation,
-  LogicalPlan, Project, Repartition, SubqueryAlias, Union, View}
+import org.apache.spark.sql.catalyst.plans.logical.{CTERelationDef, CTERelationRef, Filter,
+  GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Project, Repartition, SubqueryAlias, Union,
+  View, WithCTE}
 import org.apache.spark.sql.graft.DatasetBridge
 import org.apache.spark.storage.StorageLevel
 
@@ -208,16 +209,20 @@ final class GraftSession private[session] (
   }
 
   /** `df` reading its driver-resident relations bare when it only
-    * projects, filters and limits them (a point SELECT, a
-    * read-after-write, the rows of an INSERT … SELECT): such a plan needs
-    * no single partition, and over the bare relation the optimiser folds
-    * it on the driver (`ConvertToLocalRelation`) with no Spark job. The
-    * coalesce is removed from the analyzed plan, so the optimiser runs
-    * once, over the folded shape. Any other frame as it is. */
+    * projects, filters and limits them (a point SELECT, also one written
+    * as a CTE, a read-after-write, the rows of an INSERT … SELECT): such
+    * a plan needs no single partition, and over the bare relation the
+    * optimiser folds it on the driver (`ConvertToLocalRelation`) with no
+    * Spark job. The coalesce is removed from the analyzed plan, so the
+    * optimiser runs once, over the folded shape. A CTE reference folds
+    * because its definition is a child of the enclosing `WithCTE`, which
+    * is checked too. Any other frame as it is. */
   private def uncoalesced(df: DataFrame): DataFrame = {
     def folds(p: LogicalPlan): Boolean = p match {
-      case _: Project | _: Filter | _: GlobalLimit | _: LocalLimit | _: SubqueryAlias | _: View =>
+      case _: Project | _: Filter | _: GlobalLimit | _: LocalLimit | _: SubqueryAlias | _: View |
+          _: WithCTE | _: CTERelationDef =>
         p.children.forall(folds)
+      case _: CTERelationRef => true
       case _ => Lineage.isDriverResident(p)
     }
     val plan = df.queryExecution.analyzed

@@ -90,12 +90,12 @@ class PlanGuardSpec extends SparkSpec {
     // this guard cannot build without executing micro-batches; their
     // batch-side shapes (window agg, range join) are covered by
     // e05/e06/e07, and the streaming gates themselves run in Verify.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => skip(name) }
-      .flatMap { case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.executedPlan.toString
+    val offenders = SparkEntry.gates.sortBy(_.name)
+      .filterNot(g => skip(g.name))
+      .flatMap { g =>
+        val plan = g.run(spark, dir).queryExecution.executedPlan.toString
         val bad = Seq("CartesianProduct", "BroadcastNestedLoopJoin").filter(plan.contains)
-        if (bad.isEmpty) None else Some(s"$name: ${bad.mkString(", ")}")
+        if (bad.isEmpty) None else Some(s"${g.name}: ${bad.mkString(", ")}")
       }
     assert(offenders.isEmpty,
       s"quadratic join shapes found:\n${offenders.mkString("\n")}")

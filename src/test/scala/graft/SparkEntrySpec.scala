@@ -3,20 +3,35 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the driver contract's shape so SparkEntry's scaladoc counts
-  * cannot rot: every gate query has an oracle EXCEPT exactly one
-  * documented rows-only entry (d03 — proven not
-  * DuckDB-v1.0-expressible, see COVERAGE.md). */
+  * cannot rot: every gate has an oracle EXCEPT exactly one documented
+  * rows-only entry (d03 — proven not DuckDB-v1.0-expressible, see
+  * COVERAGE.md). */
 class SparkEntrySpec extends AnyFunSuite {
+  import graft.queries.Gate
 
   test("every query has an oracle except the one documented rows-only entry") {
-    val queries = SparkEntry.queries.keySet
-    val oracles = SparkEntry.oracleSql.keySet
-    assert(queries.size == oracles.size + 1,
-      s"queries=${queries.size} oracles=${oracles.size}; rows-only set changed — " +
+    val rowsOnly = SparkEntry.gates.filter(_.oracle.isEmpty).map(_.name)
+    assert(rowsOnly == Seq("d03_simhash_pairs"),
+      s"rows-only gates $rowsOnly; the rows-only set changed — " +
         "update SparkEntry's scaladoc and COVERAGE.md")
-    assert((queries -- oracles) == Set("d03_simhash_pairs"))
-    // no orphan oracles for queries that don't exist
-    assert((oracles -- queries).isEmpty, s"orphan oracle SQL: ${oracles -- queries}")
+  }
+
+  test("gate names are unique") {
+    // a Map literal kept the last of two equal keys without a word
+    val names = SparkEntry.gates.map(_.name)
+    assert(names.distinct.size == names.size,
+      s"declared twice: ${names.diff(names.distinct)}")
+  }
+
+  test("exactly the high-peak-memory oracles carry the DuckDB memory prologue") {
+    val heavy = SparkEntry.gates
+      .filter(_.oracle.exists(_.startsWith(Gate.duckMemPrologue))).map(_.name).toSet
+    assert(heavy == Set(
+      "t31_url_prep", "t32_postings_search", "t33_lm_filter",
+      "t34_cm_join_size", "t35_ngram_decontam", "t36_dsir_select",
+      "t37_table_profile", "t38_unigram_learn", "t39_unigram_encode",
+      "t40_dup_span_excise", "p20_perplexity_buckets", "p21_decontam_split",
+      "e19_stream_lm_screen", "e20_stream_dsir_screen"))
   }
 
   test("every gate query appears in COVERAGE.md (inventory cannot drift)") {

@@ -17,7 +17,7 @@ class UnicodeNormSpec extends SparkSpec {
     ss.toDF("s").select(UnicodeNorm.nfc(col("s")).as("n")).as[String].collect().toSeq
 
   test("d16 fixture markers: all three spellings NFC-fold to the precomposed bytes") {
-    import graft.queries.PipelineQueries.{nfcMarkerPre, nfcMarkerDecomposed, nfcMarkerSingleton}
+    import graft.queries.DedupGates.{nfcMarkerPre, nfcMarkerDecomposed, nfcMarkerSingleton}
     // the precomposed marker IS normal form — nfc is identity on it
     val Seq(p, d, s) = nfcOf(nfcMarkerPre, nfcMarkerDecomposed, nfcMarkerSingleton)
     assert(p === nfcMarkerPre)

@@ -39,6 +39,9 @@ class SessionJobCountSpec extends SparkSpec with SessionFlows {
     } == 0)
     assert(collectJobs(s, "SELECT name, role FROM users WHERE id = 1") == 0)
     assert(s.sql("SELECT name, role FROM users WHERE id = 1").head().toSeq == Seq("Alice", "user"))
+    val cte = "WITH u AS (SELECT id, name, role FROM users WHERE id = 1) SELECT name, role FROM u"
+    assert(collectJobs(s, cte) == 0)
+    assert(s.sql(cte).head().toSeq == Seq("Alice", "user"))
     assert(s.sql("SELECT id FROM users ORDER BY id").collect().map(_.getLong(0)).toSeq ==
       Seq(1L, 2L, 4L, 5L))
     s.close()

@@ -11,10 +11,14 @@ a float or a list element that differs in its last bit does. check.py's
 
 File hashes cannot be compared instead: parquet-mr writes each column
 chunk's `encodings` list in hash-set order, so two runs of the same code
-write different bytes. Exits 1 if any gate differs or exists on one side
-only.
+write different bytes.
+
+The two dirs' oracle_sql.json files are compared too: the same gate names,
+and byte-equal SQL for each. Exits 1 if any gate differs or exists on one
+side only, or if the oracles differ.
 """
 import glob
+import json
 import os
 import sys
 
@@ -33,6 +37,21 @@ def decode(qdir):
         rows += [repr(tuple(r[c] for c in names)) for r in table.to_pylist()]
     rows.sort()
     return schemas, meta, rows
+
+
+def oracle_diffs(a, b):
+    """(lines naming each oracle difference, count of identical oracles)."""
+    sides = []
+    for d in (a, b):
+        f = f"{d}/oracle_sql.json"
+        if not os.path.exists(f):
+            return [f"ORACLE DIFF: no oracle_sql.json in {d}"], 0
+        with open(f, encoding="utf-8") as fh:
+            sides.append(json.load(fh))
+    oa, ob = sides
+    lines = [f"ORACLE DIFF {k}: only in {a if k in oa else b}" for k in sorted(oa.keys() ^ ob.keys())]
+    lines += [f"ORACLE DIFF {k}: SQL differs" for k in sorted(oa.keys() & ob.keys()) if oa[k] != ob[k]]
+    return lines, sum(oa[k] == ob[k] for k in oa.keys() & ob.keys())
 
 
 def main():
@@ -58,8 +77,12 @@ def main():
         else:
             print(f"SAME {name}: {len(da[2])} rows")
             same += 1
-    print(f"\n== {same} identical, {differ} differ ==")
-    sys.exit(1 if differ else 0)
+    odiff, osame = oracle_diffs(a, b)
+    for line in odiff:
+        print(line)
+    print(f"\n== {same} identical, {differ} differ; oracles: {osame} identical, "
+          f"{len(odiff)} differ ==")
+    sys.exit(1 if differ or odiff else 0)
 
 
 if __name__ == "__main__":
